@@ -257,9 +257,12 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_session's session_window, verified against the same SQL shape."""
     ev = table(spark, sf_dir, "events").select("user_id", "event_id", "ts")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
+    # Gap in microseconds, the timestamps' own precision: whole seconds
+    # (cast to long) would keep events 30 min 0.7 s apart in one session,
+    # while the oracle compares the exact interval.
+    gap = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
     flagged = ev.withColumn(
-        "is_new", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
+        "is_new", F.when(gap.isNull() | (gap > 1800 * 1_000_000), 1).otherwise(0)
     )
     run = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

@@ -1171,6 +1171,28 @@ def _pq_code_col(books):
     return _code
 
 
+def _ivfpq_encode(
+    vectors: DataFrame, books, cent_ids, C, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, bucket, pq_code) of every vector against a fitted IVF-PQ
+    quantizer: bucket = argmax dot against the unit centroids (ties to the
+    lowest cent_id), code = _pq_code_col.  One Arrow pass of one
+    projection computes both — no self-join of two derived projections
+    (which cost an id-keyed shuffle of the whole vector set)."""
+    from pyspark.sql import types as T
+
+    @F.pandas_udf(T.LongType())
+    def _bucket(v: pd.Series) -> pd.Series:
+        V = np.array(list(v), dtype=np.float64)
+        return pd.Series(cent_ids[np.argmax(V @ C.T, axis=1)])
+
+    return vectors.select(
+        F.col(id_col),
+        _bucket(F.col(vec_col)).alias("bucket"),
+        _pq_code_col(books)(F.col(vec_col)).alias("pq_code"),
+    )
+
+
 @register(
     "sim_pq_quantize",
     oracle=f"""
@@ -1351,106 +1373,158 @@ def ivfpq_topk(
     1. One map-side pass over the vector table produces (id, bucket,
        pq_code): bucket = argmax dot against the closure-shipped unit
        centroid matrix, code = per-block argmin against the PQ codebooks —
-       both Arrow-batched numpy matmuls, zero shuffle. The 512-byte float
-       vector is DROPPED here; everything that crosses the bucket join's
-       wire is an 8-byte code.
-    2. Probes explode to their nprobe nearest buckets and join the coded
-       table on bucket. Candidate ranking is ADC: per probe the m×k table
-       of (probe sub-vector · centroid) dots and the per-centroid sqnorms
-       are precomputed driver-side (m·k doubles per probe — tiny), so
-       scoring a candidate is m table gathers, vectorized over the whole
-       Arrow batch after unpacking the 4-bit fields.
+       both Arrow-batched numpy matmuls in ONE projection, zero shuffle.
+       The 512-byte float vector is DROPPED here; everything that crosses
+       the bucket join's wire is an 8-byte code.
+    2. The probe frame is evaluated ONCE (one bounded collect); the driver
+       routes each probe to its nprobe nearest buckets and precomputes its
+       ADC table — the m×k (probe sub-vector · centroid) dots plus the
+       per-centroid sqnorms, m·k doubles per probe — into one small
+       LocalRelation that joins the coded table on bucket.  Scoring a
+       candidate is m array gathers on its unpacked 4-bit fields: a native
+       Catalyst expression (_adc_scored), no Python worker.
     3. Per-probe ADC top-`rerank` (window, per-partition top-k — only
        rerank rows per probe cross the final shuffles), then join those
        few ids back to the vector table for exact cosines and keep top-k
-       (ties to lowest id, same contract as ivf_topk).
+       (ties to lowest id, same contract as ivf_topk).  The rerank's probe
+       side is rebuilt from the rows collected in step 2.
 
     Recall vs brute force is asserted in tests/test_llm_ops.py; results
-    carry TRUE cosines for every returned pair (the rerank is exact)."""
-    from pyspark.sql import types as T
-
+    carry TRUE cosines for every returned pair (the rerank is exact).  An
+    empty probe frame or vector table yields the empty result."""
+    spark = vectors.sparkSession
+    probe_rows = probes.select(probe_id_col, probe_vec_col).collect()
     sample = train_sample(vectors, id_col=id_col, vec_col=vec_col)
     books = pq_codebooks(vectors, id_col=id_col, vec_col=vec_col,
                          sample_rows=sample)
-    if books is None:  # empty vector table -> no neighbors, not a crash
-        return vectors.sparkSession.createDataFrame(
-            [], f"{probe_id_col} bigint, {id_col} bigint, cosine double"
-        )
-    m, kk, sub = books.shape
-    # Per-centroid squared norms: |recon(v)|^2 = sum_j |B[j][code_j]|^2
-    # (blocks concatenate), so the ADC cosine denominator is m gathers too.
-    bsq = (books**2).sum(axis=2)  # (m, k)
-
+    if books is None or not probe_rows:  # no vectors or no probes
+        return _no_neighbors(spark, id_col, probe_id_col)
     cent_ids, C = kmeans_centroids_np(
         vectors, id_col=id_col, vec_col=vec_col,
         init_every=init_every, sample_rows=sample,
     )
+    routed, _ = _route_probes(
+        spark, probe_rows, books, cent_ids, C, nprobe, probe_id_col
+    )
+    coded = _ivfpq_encode(vectors, books, cent_ids, C, id_col, vec_col)
+    return _adc_rerank(
+        _adc_scored(routed, coded, books.shape, id_col, probe_id_col),
+        vectors, probe_rows, k=k, rerank=rerank, id_col=id_col,
+        vec_col=vec_col, probe_id_col=probe_id_col,
+        probe_vec_col=probe_vec_col,
+    )
 
-    probe_rows = probes.select(probe_id_col, probe_vec_col).collect()
+
+def _no_neighbors(spark: SparkSession, id_col: str, probe_id_col: str) -> DataFrame:
+    """The empty (probe, id, cosine) result of an IVF-PQ query."""
+    return spark.createDataFrame(
+        [], f"{probe_id_col} bigint, {id_col} bigint, cosine double"
+    )
+
+
+def _route_probes(
+    spark: SparkSession, probe_rows, books, cent_ids, C, nprobe: int,
+    probe_id_col: str,
+) -> "tuple[DataFrame, list]":
+    """Driver-side probe side of an IVF-PQ query, from the collected
+    (probe id, vector) rows: route each probe to its ``nprobe`` nearest
+    buckets (ties to the lowest centroid id) and attach its ADC table.
+
+    Returns ``(routed, wanted)``.  ``routed`` has one row per (probe,
+    bucket) carrying ``__dt`` (the probe's m×k block·centroid dots, flat,
+    row-major), ``__bsq`` (the m×k per-centroid squared norms — the same
+    for every probe) and ``__pn`` (the probe's L2 norm): the inputs of
+    _adc_scored.  It is built from a pandas frame, so with Arrow on it is a
+    LocalRelation — a scan of it never starts a Python worker (a
+    createDataFrame of a Python list is a LogicalRDD, which does).
+    ``wanted`` is the sorted list of routed bucket ids."""
+    m, kk, sub = books.shape
     pids = np.array([r[0] for r in probe_rows], dtype=np.int64)
     P = np.array([r[1] for r in probe_rows], dtype=np.float64)
     pnorm = np.linalg.norm(P, axis=1)
     # ADC dot tables: DT[p, j, c] = P[p, j-th block] . books[j, c]
     DT = np.einsum("pjs,jcs->pjc", P.reshape(len(P), m, sub), books)
-    prow = {int(p): i for i, p in enumerate(pids)}
-
-    @F.pandas_udf(T.LongType())
-    def _bucket(v: pd.Series) -> pd.Series:
-        V = np.array(list(v), dtype=np.float64)
-        return pd.Series(cent_ids[np.argmax(V @ C.T, axis=1)])
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _route(v: pd.Series) -> pd.Series:
-        V = np.array(list(v), dtype=np.float64)
-        S = V @ C.T
-        out = []
-        for row in S:
-            idx = np.lexsort((cent_ids, -row))[:nprobe]
-            out.append(cent_ids[idx])
-        return pd.Series(out)
-
-    @F.pandas_udf(T.DoubleType())
-    def _adc(probe_id: pd.Series, code: pd.Series) -> pd.Series:
-        pi = np.array([prow[int(p)] for p in probe_id], dtype=np.int64)
-        codes = code.to_numpy(dtype=np.int64)
-        dot = np.zeros(len(codes))
-        rsq = np.zeros(len(codes))
-        for j in range(m):
-            cj = (codes >> (4 * j)) & (kk - 1)
-            dot += DT[pi, j, cj]
-            rsq += bsq[j, cj]
-        den = pnorm[pi] * np.sqrt(np.maximum(rsq, 1e-300))
-        return pd.Series(dot / den)
-
-    coded = pq_encode(vectors, books, id_col=id_col, vec_col=vec_col).select(
-        id_col, "pq_code"
+    # Per-centroid squared norms: |recon(v)|^2 = sum_j |B[j][code_j]|^2
+    # (blocks concatenate), so the ADC cosine denominator is m gathers too.
+    bsq = (books**2).sum(axis=2).ravel()
+    rows = []
+    for i, row in enumerate(P @ C.T):
+        for b in cent_ids[np.lexsort((cent_ids, -row))[:nprobe]]:
+            rows.append((pids[i], int(b), DT[i].ravel(), bsq, pnorm[i]))
+    routed = spark.createDataFrame(
+        pd.DataFrame(rows, columns=[probe_id_col, "bucket", "__dt", "__bsq", "__pn"]),
+        f"{probe_id_col} long, bucket long, __dt array<double>, "
+        "__bsq array<double>, __pn double",
     )
-    assigned = (
-        vectors.select(id_col, _bucket(F.col(vec_col)).alias("bucket"))
-        .join(coded, id_col)
+    return routed, sorted({r[1] for r in rows})
+
+
+def _adc_scored(
+    routed: DataFrame, codes: DataFrame, shape, id_col: str, probe_id_col: str
+) -> DataFrame:
+    """(probe, id, adc) for every code in each probe's routed buckets,
+    the probe itself excluded; ``shape`` is the codebooks' (m, k, sub).
+
+    ``adc`` is the ADC cosine of the candidate's packed ``pq_code``
+    against the probe's tables (the columns of _route_probes): for each
+    block j, gather the dot and the centroid sqnorm at index
+    j·k + ((code >> 4j) & (k−1)), each summed from 0.0 in j = 0..m−1
+    order.  That is the fold order of the numpy reference kernel
+    (tests/test_llm_ops.py), so every score is bit-identical to it; the
+    expression is native Catalyst, so ranking needs no Python worker.  It
+    is spelled as one SQL string: building the same tree from Column
+    calls costs ~60 py4j round trips per query."""
+    m, kk, _ = shape
+    at = [f"(shiftright(pq_code, {4 * j}) & {kk - 1}) + {j * kk}" for j in range(m)]
+    dot = " + ".join(["0D"] + [f"__dt[{a}]" for a in at])
+    rsq = " + ".join(["0D"] + [f"__bsq[{a}]" for a in at])
+    adc = F.expr(f"({dot}) / (__pn * sqrt(greatest({rsq}, 1e-300D)))")
+    return (
+        routed.join(codes, "bucket")
+        .filter(F.col(id_col) != F.col(probe_id_col))
+        .select(probe_id_col, id_col, adc.alias("adc"))
     )
-    routed = probes.select(
-        probe_id_col, F.explode(_route(F.col(probe_vec_col))).alias("bucket")
-    )
+
+
+def _adc_rerank(
+    scored: DataFrame,
+    vectors: DataFrame,
+    probe_rows,
+    *,
+    k: int,
+    rerank: int,
+    id_col: str,
+    vec_col: str,
+    probe_id_col: str,
+    probe_vec_col: str,
+) -> DataFrame:
+    """Keep each probe's ADC top-``rerank`` candidates, then exact-rerank
+    them against the true vectors and keep the top ``k`` (ties to the
+    lowest id)."""
     w_rerank = Window.partitionBy(probe_id_col).orderBy(
         F.desc("adc"), F.asc(id_col)
     )
     shortlist = (
-        routed.join(assigned, "bucket")
-        .filter(F.col(id_col) != F.col(probe_id_col))
-        .select(
-            probe_id_col, id_col,
-            _adc(F.col(probe_id_col), F.col("pq_code")).alias("adc"),
-        )
-        .withColumn("rn", F.row_number().over(w_rerank))
+        scored.withColumn("rn", F.row_number().over(w_rerank))
         .filter(F.col("rn") <= rerank)
         .select(probe_id_col, id_col)
     )
-    # Exact rerank: only |probes|·rerank ids come back for true vectors.
-    # Exact rerank: the probe side pre-binds vector + norm (_bind_vec) but
-    # the CORPUS side stays raw — only |probes|·rerank rows survive the
-    # shortlist join, so the vector norm is evaluated per surviving pair
-    # (bounded) instead of per corpus row (O(N) at 100 TB).
+    # The probe side is rebuilt from the already-collected rows as a
+    # LocalRelation (no second evaluation of the caller's probe frame) and
+    # pre-binds vector + norm (_bind_vec); the CORPUS side stays raw — only
+    # |probes|·rerank rows survive the shortlist join, so the vector norm
+    # is evaluated per surviving pair (bounded) instead of per corpus row
+    # (O(N) at 100 TB).  The collected floats are the probe vector's exact
+    # values, so the double-cast vector and its norm are unchanged.
+    probe_side = vectors.sparkSession.createDataFrame(
+        pd.DataFrame(
+            {
+                probe_id_col: [r[0] for r in probe_rows],
+                probe_vec_col: [np.asarray(r[1], dtype=np.float64) for r in probe_rows],
+            }
+        ),
+        f"{probe_id_col} long, {probe_vec_col} array<double>",
+    )
     rv = _dbl(F.col(vec_col))
     cos_pv = _dot(F.col("__rr_p"), rv) / (
         F.col("__rr_pn") * F.sqrt(_sqnorm(rv))
@@ -1460,7 +1534,7 @@ def ivfpq_topk(
         shortlist.join(vectors.select(id_col, vec_col), id_col)
         .join(
             F.broadcast(
-                _bind_vec(probes, probe_vec_col, [probe_id_col], "__rr_p", "__rr_pn")
+                _bind_vec(probe_side, probe_vec_col, [probe_id_col], "__rr_p", "__rr_pn")
             ),
             probe_id_col,
         )
@@ -1617,8 +1691,6 @@ def ann_index_build(
     Persisted components: codes/ (bucket-partitioned), centroids/,
     codebooks/ (one row per (block j, centroid c) with the sub-vector).
     Returns the manifest (component, n_rows) the build job would log."""
-    from pyspark.sql import types as T
-
     import pyarrow as pa
     import pyarrow.parquet as papq
 
@@ -1656,22 +1728,10 @@ def ann_index_build(
         sample_rows=sample,
     )
 
-    @F.pandas_udf(T.LongType())
-    def _bucket(v: pd.Series) -> pd.Series:
-        V = np.array(list(v), dtype=np.float64)
-        return pd.Series(cent_ids[np.argmax(V @ C.T, axis=1)])
-
-    # One Arrow pass computes BOTH the PQ code and the IVF bucket per
-    # vector — no self-join of two derived projections (which cost an
-    # id-keyed shuffle of the whole vector set). repartition("bucket")
-    # before the partitioned write so each inverted list lands as one
-    # file per shuffle-partition-share instead of
+    # repartition("bucket") before the partitioned write so each inverted
+    # list lands as one file per shuffle-partition-share instead of
     # (shuffle partitions × buckets) small files.
-    coded = vectors.select(
-        F.col(id_col),
-        _bucket(F.col(vec_col)).alias("bucket"),
-        _pq_code_col(books)(F.col(vec_col)).alias("pq_code"),
-    )
+    coded = _ivfpq_encode(vectors, books, cent_ids, C, id_col, vec_col)
     coded.repartition("bucket").write.mode("overwrite").partitionBy(
         "bucket"
     ).parquet(os.path.join(path, "codes"))
@@ -1832,128 +1892,86 @@ def ann_index_query(
     bucket partitions of the codes table (static IN-filter on the
     partition column → directory-level pruning), ADC-rank the codes, and
     exact-rerank the shortlist against the true vectors. Identical
-    result contract to ivfpq_topk; the difference is WHERE the quantizer
-    state comes from — parquet, not a per-call refit."""
-    from pyspark.sql import types as T
+    result contract to ivfpq_topk, and the same ranking and rerank
+    helpers; the difference is WHERE the quantizer state comes from —
+    parquet read on the driver, not a per-call refit.
 
-    q = _load_quantizer(spark, path)
-    if q is None:  # index built over an empty corpus -> zero results
-        return spark.createDataFrame(
-            [], f"{probe_id_col} bigint, {id_col} bigint, cosine double"
-        )
-    books, cent_ids, C = q
-    m, kk, sub = books.shape
-    bsq = (books**2).sum(axis=2)
-
+    No job runs for bookkeeping: the quantizer is read with pyarrow, the
+    probe frame is evaluated once (one collect), the routed probes and
+    their ADC tables are a LocalRelation, and ADC scoring is a native
+    expression — the executed plan holds no Python evaluation and no
+    RDD scan (pinned in tests/test_plans.py).  An empty probe frame, or an
+    index built over an empty corpus, yields the empty result."""
+    q = _load_quantizer(path)
+    if q is None:
+        return _no_neighbors(spark, id_col, probe_id_col)
     probe_rows = probes.select(probe_id_col, probe_vec_col).collect()
-    pids = np.array([r[0] for r in probe_rows], dtype=np.int64)
-    P = np.array([r[1] for r in probe_rows], dtype=np.float64)
-    pnorm = np.linalg.norm(P, axis=1)
-    DT = np.einsum("pjs,jcs->pjc", P.reshape(len(P), m, sub), books)
-    prow = {int(p): i for i, p in enumerate(pids)}
-
-    S = P @ C.T
-    routed_pairs = []
-    wanted: set = set()
-    for i, row in enumerate(S):
-        idx = np.lexsort((cent_ids, -row))[:nprobe]
-        for b in cent_ids[idx]:
-            routed_pairs.append((int(pids[i]), int(b)))
-            wanted.add(int(b))
-    routed = spark.createDataFrame(
-        routed_pairs, f"{probe_id_col} LONG, bucket LONG"
+    if not probe_rows:
+        return _no_neighbors(spark, id_col, probe_id_col)
+    books, cent_ids, C = q
+    routed, wanted = _route_probes(
+        spark, probe_rows, books, cent_ids, C, nprobe, probe_id_col
+    )
+    return _adc_rerank(
+        _adc_scored(
+            routed, _ann_candidates(spark, path, wanted, id_col), books.shape,
+            id_col, probe_id_col,
+        ),
+        vectors, probe_rows, k=k, rerank=rerank, id_col=id_col,
+        vec_col=vec_col, probe_id_col=probe_id_col,
+        probe_vec_col=probe_vec_col,
     )
 
-    @F.pandas_udf(T.DoubleType())
-    def _adc(probe_id: pd.Series, code: pd.Series) -> pd.Series:
-        pi = np.array([prow[int(p)] for p in probe_id], dtype=np.int64)
-        codes = code.to_numpy(dtype=np.int64)
-        dot = np.zeros(len(codes))
-        rsq = np.zeros(len(codes))
-        for j in range(m):
-            cj = (codes >> (4 * j)) & (kk - 1)
-            dot += DT[pi, j, cj]
-            rsq += bsq[j, cj]
-        den = pnorm[pi] * np.sqrt(np.maximum(rsq, 1e-300))
-        return pd.Series(dot / den)
 
-    # Static partition pruning: the IN-list reaches the scan as a
-    # PartitionFilters entry, so only the routed bucket files are read.
-    codes = _read_ann_codes(spark, path).filter(
-        F.col("bucket").isin(sorted(wanted))
-    )
-    # Tombstone-aware serving (ann_index_delete): deleted vectors drop out
-    # of the candidate set right after the pruned scan — an anti-join on
-    # the tiny tombstone relation (broadcast-sized by contract), exactly
-    # equivalent to physically removing their code rows (same quantizer,
-    # same ADC ranking over the survivors; pinned in tests/test_llm_ops.py
-    # against ann_index_compact's physical rewrite).  No tombstones → the
-    # plan is byte-identical to pre-delete rounds.
+def _ann_candidates(
+    spark: SparkSession, path: str, wanted: list, id_col: str
+) -> DataFrame:
+    """The live code rows of the ``wanted`` buckets of a persisted index.
+
+    Static partition pruning: the IN-list reaches the scan as a
+    PartitionFilters entry, so only the routed bucket files are read.
+    Tombstone-aware serving (ann_index_delete): deleted vectors drop out
+    right after the pruned scan — an anti-join on the tiny tombstone
+    relation (broadcast-sized by contract), exactly equivalent to
+    physically removing their code rows (same quantizer, same ADC ranking
+    over the survivors; pinned in tests/test_llm_ops.py against
+    ann_index_compact's physical rewrite).  No tombstones → no anti-join
+    in the plan at all."""
+    codes = _read_ann_codes(spark, path).filter(F.col("bucket").isin(wanted))
     tomb = _read_ann_tombstones(spark, path, id_col)
     if tomb is not None:
         codes = codes.join(tomb, id_col, "left_anti")
-    w_rerank = Window.partitionBy(probe_id_col).orderBy(
-        F.desc("adc"), F.asc(id_col)
-    )
-    shortlist = (
-        routed.join(codes, "bucket")
-        .filter(F.col(id_col) != F.col(probe_id_col))
-        .select(
-            probe_id_col,
-            id_col,
-            _adc(F.col(probe_id_col), F.col("pq_code")).alias("adc"),
-        )
-        .withColumn("rn", F.row_number().over(w_rerank))
-        .filter(F.col("rn") <= rerank)
-        .select(probe_id_col, id_col)
-    )
-    # Exact rerank: the probe side pre-binds vector + norm (_bind_vec) but
-    # the CORPUS side stays raw — only |probes|·rerank rows survive the
-    # shortlist join, so the vector norm is evaluated per surviving pair
-    # (bounded) instead of per corpus row (O(N) at 100 TB).
-    rv = _dbl(F.col(vec_col))
-    cos_pv = _dot(F.col("__rr_p"), rv) / (
-        F.col("__rr_pn") * F.sqrt(_sqnorm(rv))
-    )
-    w_topk = Window.partitionBy(probe_id_col).orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        shortlist.join(vectors.select(id_col, vec_col), id_col)
-        .join(
-            F.broadcast(
-                _bind_vec(probes, probe_vec_col, [probe_id_col], "__rr_p", "__rr_pn")
-            ),
-            probe_id_col,
-        )
-        .select(probe_id_col, id_col, cos_pv.alias("cos"))
-        .withColumn("rn", F.row_number().over(w_topk))
-        .filter(F.col("rn") <= k)
-        .select(probe_id_col, id_col, F.round("cos", 6).alias("cosine"))
-    )
+    return codes
 
 
-def _load_quantizer(spark: SparkSession, path: str):
+def _load_quantizer(path: str):
     """Driver-side quantizer state of a persisted IVF-PQ index:
     ``(books, cent_ids, C)`` numpy arrays, or ``None`` when the index was
-    built over an empty corpus (no codebook rows).  Bounded by contract:
-    m×k codebook rows + k centroid rows — the same tiny collect
-    ann_index_query has always done."""
-    books_df = gio.read_relation(spark, path, "codebooks")
-    brows = books_df.collect() if books_df is not None else []
-    if not brows:
+    built over an empty corpus (no codebook rows) or has no snapshot.
+    Read with pyarrow straight from the manifest's files — no Spark job:
+    m×k codebook rows + k centroid rows, always written by
+    ``pyarrow.parquet.write_table`` (build, empty-corpus build, and the
+    verbatim copy in compaction)."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    def _read(rel: str):
+        files = gio.manifest_relation_files(path, rel)
+        return pa.concat_tables([papq.read_table(f) for f in files]) if files else None
+
+    bt = _read("codebooks")
+    if bt is None or bt.num_rows == 0:
         return None
-    m = 1 + max(r["j"] for r in brows)
-    kk = 1 + max(r["c"] for r in brows)
-    sub = len(brows[0]["sub"])
-    books = np.empty((m, kk, sub))
-    for r in brows:
-        books[r["j"], r["c"]] = r["sub"]
-    cents_df = gio.read_relation(spark, path, "centroids")
-    cent_rows = sorted(
-        cents_df.collect() if cents_df is not None else [],
-        key=lambda r: r[0],
-    )
-    cent_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
-    C = np.array([r[1] for r in cent_rows], dtype=np.float64)
+    j = bt.column("j").to_numpy()
+    c = bt.column("c").to_numpy()
+    subs = np.array(bt.column("sub").to_pylist(), dtype=np.float64)
+    books = np.empty((1 + j.max(), 1 + c.max(), subs.shape[1]))
+    books[j, c] = subs
+    ct = _read("centroids")
+    ids = ct.column("cent_id").to_numpy()
+    order = np.argsort(ids, kind="stable")
+    cent_ids = ids[order].astype(np.int64)
+    C = np.array(ct.column("c_emb").to_pylist(), dtype=np.float64)[order]
     return books, cent_ids, C
 
 
@@ -1996,26 +2014,14 @@ def ann_index_append(
     Raises ValueError on an index with no quantizer state (built over an
     empty corpus): there is nothing sound to encode against — that case
     IS the rebuild trigger."""
-    from pyspark.sql import types as T
-
-    q = _load_quantizer(spark, path)
+    q = _load_quantizer(path)
     if q is None:
         raise ValueError(
             "ann_index_append: index has no quantizer state (empty-corpus "
             "build) — rebuild with ann_index_build instead"
         )
     books, cent_ids, C = q
-
-    @F.pandas_udf(T.LongType())
-    def _bucket(v: pd.Series) -> pd.Series:
-        V = np.array(list(v), dtype=np.float64)
-        return pd.Series(cent_ids[np.argmax(V @ C.T, axis=1)])
-
-    coded = new_vectors.select(
-        F.col(id_col),
-        _bucket(F.col(vec_col)).alias("bucket"),
-        _pq_code_col(books)(F.col(vec_col)).alias("pq_code"),
-    )
+    coded = _ivfpq_encode(new_vectors, books, cent_ids, C, id_col, vec_col)
     with gio.manifest_append(path, ["codes"], meta=meta):
         coded.repartition("bucket").write.mode("append").partitionBy("bucket").parquet(
             os.path.join(path, "codes")
@@ -2237,7 +2243,7 @@ def sim_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _clone_incr_ann_index(spark, sf_dir)
     pre_files = _code_files(idx)
     pre_state = _state_digest(idx)
-    if _load_quantizer(spark, idx) is None:
+    if _load_quantizer(idx) is None:
         # Empty corpus: the append IS a rebuild (see docstring).
         ann_index_build(spark, batch, idx).collect()
         pre_files = set()  # a rebuild replaces the (empty) file set
@@ -2272,7 +2278,7 @@ def sim_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_llm_ops.py."""
     idx = _clone_incr_ann_index(spark, sf_dir)
     batch = table(spark, sf_dir, "embeddings").filter(_ann_batch_pred())
-    if _load_quantizer(spark, idx) is None:
+    if _load_quantizer(idx) is None:
         ann_index_build(spark, batch, idx).collect()  # empty-corpus rebuild
     elif batch.limit(1).count():
         ann_index_append(spark, batch, idx)
@@ -2459,7 +2465,7 @@ def sim_index_retrain_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     is trivially rebuild-needed; all three checks report False (pinned
     in tests/test_llm_ops.py, never reachable on a driver fixture)."""
     idx = _ensure_incr_ann_index(spark, sf_dir)
-    q = _load_quantizer(spark, idx)
+    q = _load_quantizer(idx)
     e = table(spark, sf_dir, "embeddings")
     batch = e.filter(_ann_batch_pred())
     if q is None:

@@ -156,6 +156,29 @@ def test_op_degrades_on_empty_corpus(spark, empty_sf_dir, name):
         assert len(rows) <= 5
 
 
+@pytest.mark.parametrize("api", ["ann_index_query", "ivfpq_topk"])
+def test_ivfpq_query_degrades_on_empty_probe_frame(spark, sf_dir, api):
+    """A zero-row probe frame against a NON-empty corpus returns the empty
+    (probe_id, vec_id, cosine) frame — it used to raise numpy's AxisError
+    from the probe-norm step."""
+    from pyspark.sql import functions as F
+
+    from sqlite_to_clickhouse_spark.io import table
+    from sqlite_to_clickhouse_spark.operators import similarity as sim
+
+    e = table(spark, sf_dir, "embeddings")
+    probes = e.filter(F.lit(False)).select(
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("p_emb")
+    )
+    if api == "ann_index_query":
+        path, _ = sim._ensure_index(spark, sf_dir)
+        df = sim.ann_index_query(spark, e, path, probes, k=sim.TOP_K, nprobe=sim.NPROBE)
+    else:
+        df = sim.ivfpq_topk(e, probes, k=sim.TOP_K, nprobe=sim.NPROBE)
+    assert df.columns == ["probe_id", "vec_id", "cosine"]
+    assert df.collect() == []
+
+
 _BLANK_OPS = [
     # divide-by-zero / banding hazards found by the blank-document sweep
     "dedup_fuzzy_minhash",

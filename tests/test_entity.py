@@ -127,6 +127,52 @@ def test_sequence_cap_truncates(spark, tmp_path):
     assert r.n_view_to_purchase == 0
 
 
+def test_sessionize_breaks_on_exact_interval(spark, tmp_path):
+    """events_sessionize compares the exact gap (microseconds) with 30
+    minutes, like its oracle: 1800.7 s apart breaks the session even
+    though the whole-second difference is 1800, exactly 1800 s does not,
+    and 1799.5 s apart across a second boundary does not."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sqlite_to_clickhouse_spark.operators.eventsops import (
+        _SESSIONIZE_ORACLE,
+        events_sessionize,
+    )
+    from tests.utils import assert_df_matches_oracle
+
+    base = dt.datetime(2024, 1, 1)
+    at = [  # (user_id, seconds after base)
+        (1, 0.0), (1, 1800.0), (1, 3600.7), (1, 5400.5),
+        (2, 0.9), (2, 1800.4),
+    ]
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(len(at)), pa.int64()),
+            "ts": pa.array(
+                [base + dt.timedelta(seconds=s) for _, s in at], pa.timestamp("us")
+            ),
+            "user_id": pa.array([u for u, _ in at], pa.int64()),
+            "event_type": pa.array(["view"] * len(at)),
+            "value": pa.array([0.0] * len(at)),
+            "props": pa.array(["{}"] * len(at)),
+        }),
+        str(sf / "events.parquet"),
+    )
+    df = events_sessionize(spark, str(sf))
+    sessions = sorted((r.user_id, r.session_no, r.n_events) for r in df.collect())
+    assert sessions == [(1, 1, 2), (1, 2, 2), (2, 1, 2)]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet'")
+    try:
+        assert_df_matches_oracle(df, con, _SESSIONIZE_ORACLE, name="events_sessionize")
+    finally:
+        con.close()
+
+
 def test_source_overlap_bounds(spark, sf_dir):
     from sqlite_to_clickhouse_spark.operators.text import text_source_overlap
 

@@ -537,6 +537,83 @@ def test_persisted_index_matches_inline_ivfpq(spark, sf_dir):
     assert served, "index query returned nothing"
 
 
+def _adc_reference(probe_rows, books, probe_id, code):
+    """The numpy ADC kernel the native expression replaced: per probe the
+    m×k (sub-vector · centroid) dot table and the per-centroid sqnorms,
+    m gathers per code, summed from 0.0 in block order."""
+    import numpy as np
+
+    m, kk, sub = books.shape
+    bsq = (books**2).sum(axis=2)
+    pids = np.array([r[0] for r in probe_rows], dtype=np.int64)
+    P = np.array([r[1] for r in probe_rows], dtype=np.float64)
+    pnorm = np.linalg.norm(P, axis=1)
+    DT = np.einsum("pjs,jcs->pjc", P.reshape(len(P), m, sub), books)
+    prow = {int(p): i for i, p in enumerate(pids)}
+    pi = np.array([prow[int(p)] for p in probe_id], dtype=np.int64)
+    codes = np.asarray(code, dtype=np.int64)
+    dot = np.zeros(len(codes))
+    rsq = np.zeros(len(codes))
+    for j in range(m):
+        cj = (codes >> (4 * j)) & (kk - 1)
+        dot += DT[pi, j, cj]
+        rsq += bsq[j, cj]
+    den = pnorm[pi] * np.sqrt(np.maximum(rsq, 1e-300))
+    return dot / den
+
+
+def test_native_adc_matches_numpy_reference(spark, sf_dir):
+    """Every ADC score the persisted index ranks by must equal the numpy
+    reference kernel bit-for-bit, on the fixture index and on a
+    tombstoned copy of it (the shortlist and so every served pair depend
+    on these scores, ties included)."""
+    from sqlite_to_clickhouse_spark.operators.similarity import (
+        ANN_DEL_MOD,
+        ANN_DEL_REM,
+        NPROBE,
+        _adc_scored,
+        _ann_candidates,
+        _clone_full_index,
+        _ensure_index,
+        _load_quantizer,
+        _read_ann_codes,
+        _route_probes,
+        ann_index_delete,
+    )
+
+    e, probes = _ann_probes(spark, sf_dir)
+    probe_rows = probes.collect()
+    full, _ = _ensure_index(spark, sf_dir)
+    tombstoned = _clone_full_index(spark, sf_dir)
+    ann_index_delete(
+        e.filter(F.col("vec_id") % ANN_DEL_MOD == ANN_DEL_REM).select("vec_id"),
+        tombstoned,
+    )
+    counts = []
+    for path in (full, tombstoned):
+        books, cent_ids, C = _load_quantizer(path)
+        routed, wanted = _route_probes(
+            spark, probe_rows, books, cent_ids, C, NPROBE, "probe_id"
+        )
+        scored = _adc_scored(
+            routed, _ann_candidates(spark, path, wanted, "vec_id"),
+            books.shape, "vec_id", "probe_id",
+        ).collect()
+        assert scored, "no candidates scored"
+        code_of = {
+            r.vec_id: r.pq_code
+            for r in _read_ann_codes(spark, path).select("vec_id", "pq_code").collect()
+        }
+        ref = _adc_reference(
+            probe_rows, books,
+            [r.probe_id for r in scored], [code_of[r.vec_id] for r in scored],
+        )
+        got = [r.adc for r in scored]
+        assert got == ref.tolist(), path
+        counts.append(len(scored))
+    assert counts[1] < counts[0], "the tombstones removed no candidate"
+
+
 def test_index_query_prunes_bucket_partitions(spark, sf_dir):
     """The codes scan must carry a PartitionFilters entry on the bucket
     column — the directory-level pruning that makes a routed query read

@@ -799,3 +799,42 @@ def test_bigram_logprob_two_explodes_only(spark, sf_dir):
     p = _plan(spark, sf_dir, "text_bigram_logprob")
     gens = [l for l in p.splitlines() if l.strip().startswith("(") and "Generate" in l]
     assert len(gens) == 2, gens
+
+
+def test_ann_index_query_runs_without_python_or_rdd_scans(spark, sf_dir):
+    """The persisted IVF-PQ serving path is JVM-only once the probes are
+    collected: ADC scoring is a native expression (no Arrow/row Python
+    evaluation) and the driver-built relations are LocalRelations (no
+    ``Scan ExistingRDD``, which would start a Python worker per scan).
+    Checked on the EXECUTED plan, and the codes scan keeps its static
+    bucket PartitionFilters."""
+    from pyspark.sql import functions as F
+
+    from sqlite_to_clickhouse_spark.io import table
+    from sqlite_to_clickhouse_spark.operators.similarity import (
+        N_PROBES,
+        NPROBE,
+        TOP_K,
+        _ensure_index,
+        ann_index_query,
+    )
+
+    path, _ = _ensure_index(spark, sf_dir)
+    e = table(spark, sf_dir, "embeddings")
+    probes = e.filter(F.col("vec_id") < N_PROBES).select(
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("p_emb")
+    )
+    df = ann_index_query(spark, e, path, probes, k=TOP_K, nprobe=NPROBE)
+    assert df.collect()
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    p = buf.getvalue()
+    assert "isFinalPlan=true" in p, p
+    for node in ("ArrowEvalPython", "BatchEvalPython", "Scan ExistingRDD"):
+        assert node not in p, f"{node} in the served plan:\n{p}"
+    assert "LocalTableScan" in p
+    assert any(
+        "PartitionFilters" in l and "bucket" in l and "IN" in l.upper()
+        for l in p.splitlines()
+    ), p

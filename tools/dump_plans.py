@@ -59,11 +59,16 @@ def _executions(spark):
     return out
 
 
-def write_plans(spark, since_id: int) -> str:
-    """Concatenated executed plans of write-side jobs run after ``since_id``."""
+def _last_execution_id(spark) -> int:
+    return max([e[0] for e in _executions(spark)] or [-1])
+
+
+def write_plans(spark, since_id: int, exclude: "set[int]" = frozenset()) -> str:
+    """Concatenated executed plans of write-side jobs run after ``since_id``,
+    minus the executions in ``exclude``."""
     chunks = []
     for eid, desc, plan in _executions(spark):
-        if eid <= since_id:
+        if eid <= since_id or eid in exclude:
             continue
         if any(m in plan for m in _WRITE_MARKERS):
             chunks.append(
@@ -85,7 +90,7 @@ def main() -> None:
     registry = all_queries()
     for name in names:
         fn = registry[name].fn
-        last_id = max([e[0] for e in _executions(spark)] or [-1])
+        last_id = _last_execution_id(spark)
         df = fn(spark, sf_dir)
         with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as fh:
             fh.write(plan_text(df))
@@ -93,8 +98,11 @@ def main() -> None:
         if dump_writes:
             # Consume the op so lazy write-side work (none today, but
             # cheap insurance) lands in the status store before the read.
+            # The consume is itself a write execution (the first one it
+            # starts); it is not the op's, so it is left out.
+            before_consume = _last_execution_id(spark)
             df.write.format("noop").mode("overwrite").save()
-            body = write_plans(spark, last_id)
+            body = write_plans(spark, last_id, exclude={before_consume + 1})
             wpath = os.path.join(outdir, f"{name}_{suffix}_writes.txt")
             with open(wpath, "w") as fh:
                 fh.write(body or "(no write-side executions recorded)\n")
