@@ -49,7 +49,7 @@ def _fsync_dir(dirpath: str) -> None:
         os.close(fd)
 
 
-def run_jobs(*thunks) -> list:
+def run_jobs(*thunks, max_workers: "int | None" = None) -> list:
     """Run independent Spark ACTIONS concurrently from driver threads and
     return their results in argument order.
 
@@ -60,29 +60,37 @@ def run_jobs(*thunks) -> list:
     each job's scheduling/commit tail — submitting the writes from a
     small thread pool lets the next job's tasks back-fill those cores.
     FIFO scheduling keeps the first job prioritized, which is exactly
-    the back-fill behaviour wanted.
+    the back-fill behaviour wanted.  ``max_workers`` caps how many
+    thunks run at once (default: all of them).
 
-    Exceptions propagate (the first one raised, after all threads
-    finish) so a failed write inside a manifest_append body still aborts
+    Exceptions propagate (the first one in argument order, after every
+    started thunk finishes; thunks not yet started when one fails never
+    start) so a failed write inside a manifest_append body still aborts
     the commit.  Shared cached frames are safe: concurrent first
     materialization of a persisted partition is serialized by the block
     manager (one task computes, the rest wait)."""
-    if len(thunks) == 1:
-        return [thunks[0]()]
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    import threading
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        results, first_err = [], None
-        for f in futures:
-            try:
-                results.append(f.result())
-            except BaseException as ex:  # noqa: BLE001 — re-raised below
-                results.append(None)
-                first_err = first_err or ex
-        if first_err is not None:
-            raise first_err
-        return results
+    failed = threading.Event()
+
+    def run(thunk):
+        if failed.is_set():
+            return None  # a thunk failed: start no more
+        try:
+            return thunk()
+        except BaseException:
+            failed.set()
+            raise
+
+    with ThreadPoolExecutor(max_workers=min(len(thunks), max_workers or len(thunks))) as pool:
+        futures = [pool.submit(run, t) for t in thunks]
+    for f in futures:
+        if f.exception() is not None:
+            raise f.exception()
+    return [f.result() for f in futures]
 
 
 def read_marker(marker: str) -> "str | None":

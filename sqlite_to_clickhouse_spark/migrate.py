@@ -12,19 +12,21 @@ Differences from the reference, by design (SURVEY.md §3.2): extraction is
 partition-parallel instead of a single synchronous cursor; coercion is one
 codegen'd projection instead of a per-row Python loop; dedup happens
 engine-side with an explicit version column instead of delegating to a
-post-load OPTIMIZE; tables can be migrated concurrently by the caller since
-each table's pipeline is independent.
+post-load OPTIMIZE; the tables are migrated concurrently (up to one per
+core) since each table's pipeline is independent.
 """
 
 from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Dict, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sqlite_to_clickhouse_spark.io import run_jobs
 from sqlite_to_clickhouse_spark.sources import sinks
 from sqlite_to_clickhouse_spark.sources.sqlite import (
     ROWID,
@@ -73,9 +75,16 @@ def migrate_sqlite(
     version (insertion order ⇒ last insert wins), exactly the observable
     semantics of ReplacingMergeTree + OPTIMIZE. Tables without a pk are
     loaded as-is — matching the reference, whose ORDER BY tuple() makes
-    per-key dedup vacuous (main.py:66)."""
-    reports: Dict[str, TableReport] = {}
-    for t in tables if tables is not None else sqlite_catalog(db_path):
+    per-key dedup vacuous (main.py:66).
+
+    Up to ``sc.defaultParallelism`` tables are in flight at once; the
+    reports come back in catalog (or ``tables``) order, and the first
+    failure is re-raised once the tables in flight finish."""
+    # A table named twice migrates once: two concurrent overwrites of one
+    # target would race.
+    names = list(dict.fromkeys(tables if tables is not None else sqlite_catalog(db_path)))
+
+    def migrate_table(t: str) -> TableReport:
         _schema, pk = sqlite_schema(db_path, t)
         df = read_sqlite(
             spark,
@@ -94,8 +103,6 @@ def migrate_sqlite(
         # job itself — one pass over the data, no post-load count, exactly
         # the reference's inline counter (main.py:171-177) without its
         # second look at the table.
-        from pyspark.sql import Observation
-
         obs = Observation(f"migrate_{t}")
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         if clickhouse_url:
@@ -104,6 +111,13 @@ def migrate_sqlite(
         else:
             target = os.path.join(out_dir, t)
             sinks.sink_parquet(df, target)
-        rows = obs.get["rows"]
-        reports[t] = TableReport(table=t, rows=rows, pk=pk, deduped=deduped, target=target)
-    return reports
+        return TableReport(table=t, rows=obs.get["rows"], pk=pk, deduped=deduped, target=target)
+
+    # The per-table pipelines are independent: up to one table per core in
+    # flight, so one table's small jobs and commit tail back-fill the cores
+    # another table leaves idle.
+    reports = run_jobs(
+        *[partial(migrate_table, t) for t in names],
+        max_workers=spark.sparkContext.defaultParallelism,
+    )
+    return dict(zip(names, reports))

@@ -139,19 +139,27 @@ def blocked_name_pairs(names: DataFrame) -> DataFrame:
     The blocking keys (words) are df-capped before the self-join; the
     pair relation is DISTINCT on (name_a, name_b) so names sharing two
     words don't emit twice."""
-    words = (
+    # PERSISTED (r13, guide §1.2): three consumers — the df cap agg
+    # and BOTH sides of the blocked self-join — re-ran the
+    # names-scan + explode + distinct once each; the frame is
+    # (name, word) pairs, vocabulary-bounded.
+    return _word_pairs(_name_words(names).persist())
+
+
+def _name_words(names: DataFrame) -> DataFrame:
+    """Distinct ``(nm, w)`` rows: each name's non-empty words.  Deduped on
+    (nm, w): a repeated word within one name ("red red widget") must count
+    its tokens' df ONCE, so the stop-key cap is a true distinct-name
+    document frequency (ADVICE r9)."""
+    return (
         names.select("nm", F.explode(F.split(F.col("nm"), " ")).alias("w"))
         .filter(F.col("w") != "")
-        # Dedupe (nm, w): a repeated word within one name ("red red
-        # widget") must count its tokens' df ONCE, so the stop-key cap is
-        # a true distinct-name document frequency (ADVICE r9).
         .distinct()
-        # PERSISTED (r13, guide §1.2): three consumers — the df cap agg
-        # and BOTH sides of the blocked self-join — re-ran the
-        # names-scan + explode + distinct once each; the frame is
-        # (name, word) pairs, vocabulary-bounded.
-        .persist()
     )
+
+
+def _word_pairs(words: DataFrame) -> DataFrame:
+    """blocked_name_pairs over an already-built ``_name_words`` relation."""
     # Stop-key filter: df over DISTINCT names (names is already distinct,
     # and words is distinct on (nm, w)).
     keys = (
@@ -778,13 +786,13 @@ def er_index_build(names: DataFrame, path: str) -> None:
 
     spark = names.sparkSession
     names = names.select("nm").distinct()
-    words = (
-        names.select("nm", F.explode(F.split(F.col("nm"), " ")).alias("w"))
-        .filter(F.col("w") != "")
-        .distinct()
-    )
+    # One words relation feeds the stop keys, the postings and the pair
+    # graph.  Not persisted: a cached copy keeps its shuffle's full
+    # partition count, which the postings write would inherit as that
+    # many near-empty files; within each job the self-join sides reuse
+    # one exchange instead.
+    words = _name_words(names)
     dfc = words.groupBy("w").agg(F.count("*").alias("df"))
-    keys = dfc.filter(F.col("df") <= _ER_BLOCK_DF_CAP).select("w")
     stop = dfc.filter(F.col("df") > _ER_BLOCK_DF_CAP).select("w")
     postings = words.join(F.broadcast(stop), "w", "left_anti").select("w", "nm")
     # The verified pair graph is the build's most expensive subtree
@@ -793,7 +801,7 @@ def er_index_build(names: DataFrame, path: str) -> None:
     # persists only its derived undirected table and unpersists it
     # before returning, so without this persist the edges write would
     # re-run the whole blocking+verify pipeline from scratch.
-    pairs = blocked_name_pairs(names).select("name_a", "name_b").persist()
+    pairs = _word_pairs(words).select("name_a", "name_b").persist()
     comp = connected_components(
         pairs.select(F.col("name_a").alias("src"), F.col("name_b").alias("dst"))
     ).select(F.col("node").alias("nm"), F.col("component_id").alias("eid"))

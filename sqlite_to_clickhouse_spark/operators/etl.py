@@ -101,10 +101,11 @@ def scan_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranged-read path + cast battery (R5-R8).
 
     Uses spark.read.jdbc with partitionColumn=rowid when a SQLite JDBC
-    driver is on the classpath; otherwise the mapInPandas ranged extractor
-    issues the identical per-partition queries executor-side (this
-    container ships no JDBC jar). Either way: 8 concurrent range scans,
-    no driver-side collection, coercion in one codegen'd projection.
+    driver is on the classpath; otherwise the mapInArrow ranged extractor
+    issues the identical per-partition queries executor-side, one
+    ``spark.range`` row per slice (no bookkeeping job or shuffle). Either
+    way: up to 8 concurrent range scans (one per 10 000 rowids), no
+    driver-side collection, coercion in one codegen'd projection.
     """
     db = _stage_sqlite(sf_dir)
     return read_sqlite(spark, db, "customer", num_partitions=8)

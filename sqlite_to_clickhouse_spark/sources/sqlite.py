@@ -8,13 +8,15 @@ Scale design: the reference streams one cursor single-threaded; here the
 extract is *partitioned by rowid range* so N partitions read concurrently —
 the same shape as a JDBC partitionColumn/lowerBound/upperBound read. When a
 SQLite JDBC driver is on the Spark classpath we use ``spark.read.jdbc``
-with those options directly; otherwise (this container has no JDBC jar) a
-``mapInPandas`` extractor opens the database *inside each task* and reads
-only its rowid slice — no driver-side collection, constant memory per task,
-executor-parallel. Values cross into Spark as raw strings and the normative
-cast battery (typemap.cast_battery, reference R5-R8) coerces them as one
-codegen'd projection — the same fetch-then-prepare split as the reference,
-minus the per-row Python loop.
+with those options directly; otherwise (no JDBC jar on the classpath)
+``spark.range`` yields one row per rowid slice, one slice per partition,
+and a ``mapInArrow`` extractor opens the database *inside each task* and
+reads only its slice straight into Arrow batches — no driver-side
+collection, no bookkeeping job or shuffle to place the slices, constant
+memory per task, executor-parallel. Values cross into Spark as raw strings
+and the normative cast battery (typemap.cast_battery, reference R5-R8)
+coerces them as one codegen'd projection — the same fetch-then-prepare
+split as the reference, minus the per-row Python loop.
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ from __future__ import annotations
 import sqlite3
 from typing import Dict, Iterator, List, Optional, Tuple
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +33,9 @@ from pyspark.sql import types as T
 from sqlite_to_clickhouse_spark.typemap import cast_battery, decl_type_to_spark
 
 ROWID = "_sqlite_rowid"
+# Rows per fetch and per Arrow batch in the fallback extract: the
+# reference's chunk size (main.py:106-116).
+_FETCH_ROWS = 10_000
 
 
 def sqlite_catalog(db_path: str) -> List[str]:
@@ -85,7 +90,7 @@ def read_sqlite(
 
     JDBC path (driver jar present): ``spark.read.jdbc`` with
     partitionColumn=rowid — Spark issues one ranged query per partition.
-    Fallback path: the same ranged queries, issued by a ``mapInPandas``
+    Fallback path: the same ranged queries, issued by a ``mapInArrow``
     extractor running in the executors. Either way the logical result is
     identical and the §1.2 coercions happen Spark-side.
 
@@ -130,7 +135,7 @@ def read_sqlite(
             *[F.col(c).cast("string").alias(c) for c in cols],
         )
     else:
-        raw = _mapinpandas_extract(spark, db_path, table, cols, lo, hi, num_partitions)
+        raw = _arrow_extract(spark, db_path, table, cols, lo, hi, num_partitions)
 
     out = [F.col(ROWID)] if with_rowid else []
     out += [
@@ -140,7 +145,7 @@ def read_sqlite(
     return raw.select(*out)
 
 
-def _mapinpandas_extract(
+def _arrow_extract(
     spark: SparkSession,
     db_path: str,
     table: str,
@@ -149,20 +154,27 @@ def _mapinpandas_extract(
     hi: int,
     num_partitions: int,
 ) -> DataFrame:
-    """Executor-side ranged extract: each input row is one rowid range; the
-    task opens the db locally and reads only its slice. String-typed output;
-    coercion is the caller's columnar cast battery."""
+    """Executor-side ranged extract: ``spark.range`` gives one row per
+    rowid slice, already one per partition, and the ``mapInArrow`` task
+    opens the db locally and reads only its slice, fetched in 10 000-row
+    chunks (the reference's chunk size) straight into Arrow batches.
+    String-typed output; coercion is the caller's columnar cast battery.
+
+    The slice bounds are computed here in Python and looked up by the
+    range ``id`` inside the task: no driver-built relation to scan, no
+    shuffle to spread it, and no Spark long arithmetic (which overflows
+    under ANSI for rowids near ±2⁶³)."""
     n = max(1, num_partitions)
     span = max(1, (hi - lo + n) // n)
     bounds = [(lo + i * span, min(hi, lo + (i + 1) * span - 1)) for i in range(n)]
     bounds = [(a, b) for a, b in bounds if a <= b] or [(0, -1)]
-    bounds_df = spark.createDataFrame(bounds, "range_lo: long, range_hi: long").repartition(
-        len(bounds)
-    )
 
     out_schema = T.StructType(
         [T.StructField(ROWID, T.LongType())]
         + [T.StructField(c, T.StringType()) for c in cols]
+    )
+    arrow_schema = pa.schema(
+        [pa.field(ROWID, pa.int64())] + [pa.field(c, pa.string()) for c in cols]
     )
     select_cols = ", ".join(f"CAST({_q(c)} AS TEXT)" for c in cols)
     query = (
@@ -170,14 +182,25 @@ def _mapinpandas_extract(
         f"WHERE rowid BETWEEN ? AND ?"
     )
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def to_batch(rows: list) -> pa.RecordBatch:
+        columns = list(zip(*rows)) or [()] * len(arrow_schema)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, t) for c, t in zip(columns, arrow_schema.types)],
+            schema=arrow_schema,
+        )
+
+    def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         con = sqlite3.connect(db_path)
         try:
-            for pdf in batches:
-                for a, b in zip(pdf["range_lo"], pdf["range_hi"]):
-                    rows = con.execute(query, (int(a), int(b))).fetchall()
-                    yield pd.DataFrame(rows, columns=[ROWID] + cols)
+            for batch in batches:
+                for i in batch.column("id").to_pylist():
+                    cur = con.execute(query, bounds[i])
+                    rows = cur.fetchmany(_FETCH_ROWS)
+                    yield to_batch(rows)  # an empty slice yields an empty batch
+                    while rows := cur.fetchmany(_FETCH_ROWS):
+                        yield to_batch(rows)
         finally:
             con.close()
 
-    return bounds_df.mapInPandas(extract, out_schema)
+    k = len(bounds)
+    return spark.range(0, k, 1, k).mapInArrow(extract, out_schema)

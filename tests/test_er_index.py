@@ -157,6 +157,39 @@ def test_compact_preserves_view_and_clears_tombstones(spark, tmp_path):
     assert src_gens and src_gens <= gio.manifest_applied_meta(dst, "gen")
 
 
+def test_build_postings_files_and_no_leftover_cache(spark, sf_dir, tmp_path):
+    """er_index_build writes no more postings files than a compaction of
+    the same store (a cached words relation would hand the postings
+    write its full shuffle width as near-empty files), and leaves no
+    persisted RDD behind once its own frames are unreferenced: Spark's
+    cleaner releases the clustering's checkpoints then, but never a
+    cached plan."""
+    import gc
+    import glob
+    import os
+    import time
+
+    sc = spark.sparkContext
+
+    def persisted() -> set:
+        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+
+    def postings_files(path: str) -> int:
+        return len(glob.glob(os.path.join(path, "postings", "*.parquet")))
+
+    before = persisted()
+    idx, dst = str(tmp_path / "idx"), str(tmp_path / "compact")
+    E.er_index_build(E._er_catalog_names(spark, sf_dir), idx)
+    deadline = time.monotonic() + 60
+    while (left := persisted() - before) and time.monotonic() < deadline:
+        gc.collect()
+        sc._jvm.System.gc()
+        time.sleep(0.25)
+    assert not left
+    E.er_index_compact(spark, idx, dst)
+    assert 1 <= postings_files(idx) <= postings_files(dst)
+
+
 @pytest.mark.parametrize(
     "sf", ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 )

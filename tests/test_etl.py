@@ -15,6 +15,7 @@ from pyspark.sql import types as T
 from sqlite_to_clickhouse_spark.migrate import migrate_sqlite, replacing_dedup
 from sqlite_to_clickhouse_spark.sources.sinks import clickhouse_ddl, engine_clause
 from sqlite_to_clickhouse_spark.sources.sqlite import (
+    ROWID,
     read_sqlite,
     sqlite_catalog,
     sqlite_schema,
@@ -149,6 +150,25 @@ def test_read_sqlite_partitioned_complete(spark, edge_db):
         assert sorted(r["rid"] for r in df.collect()) == [1, 2, 3, 4]
 
 
+def test_read_sqlite_extreme_rowids(spark, tmp_path):
+    """Rowids at both ends of the signed 64-bit range read completely for
+    any partition count: the slice bounds are exact Python integers,
+    never Spark long arithmetic (which overflows under ANSI near ±2⁶³)."""
+    path = str(tmp_path / "extreme.db")
+    rowids = [-(2**63), -5, 0, 7, 2**63 - 1]
+    con = sqlite3.connect(path)
+    con.execute("CREATE TABLE extreme_t (v TEXT)")
+    con.executemany(
+        "INSERT INTO extreme_t (rowid, v) VALUES (?, ?)", [(r, str(r)) for r in rowids]
+    )
+    con.commit()
+    con.close()
+    for n in (1, 3, 8):
+        df = read_sqlite(spark, path, "extreme_t", num_partitions=n, with_rowid=True)
+        got = sorted((r[ROWID], r["v"]) for r in df.collect())
+        assert got == [(r, str(r)) for r in rowids], n
+
+
 def test_read_sqlite_empty_table(spark, tmp_path):
     """Zero-row tables must come back empty with the inferred schema (the
     reference migrates them too — README log shows 0-row tables)."""
@@ -208,6 +228,31 @@ def test_migrate_ha_end_to_end(spark, ha_db, tmp_path):
     row = {r["run_id"]: r for r in rr.collect()}
     assert row[1]["start"] == dt.datetime(2024, 7, 25, 15, 4, 42)  # frac stripped
     assert row[2]["start"] is None
+
+
+def test_migrate_reports_in_catalog_order(spark, ha_db, tmp_path):
+    """Tables migrate concurrently, but the reports come back in catalog
+    order (or the caller's order) with every table's full row count."""
+    reports = migrate_sqlite(spark, ha_db, str(tmp_path / "all"))
+    assert list(reports) == sqlite_catalog(ha_db)
+    assert {t: r.rows for t, r in reports.items()} == {
+        "event_data": 3,
+        "recorder_runs": 2,
+        "states_meta": 0,
+        "statistics_runs": 1,
+    }
+    reports = migrate_sqlite(
+        spark, ha_db, str(tmp_path / "some"), tables=["statistics_runs", "event_data"]
+    )
+    assert list(reports) == ["statistics_runs", "event_data"]
+    assert [r.rows for r in reports.values()] == [1, 3]
+
+
+def test_migrate_unknown_table_raises(spark, ha_db, tmp_path):
+    with pytest.raises(KeyError, match="no_such_table"):
+        migrate_sqlite(
+            spark, ha_db, str(tmp_path / "out"), tables=["event_data", "no_such_table"]
+        )
 
 
 def test_cli_flag_parity_and_migration(spark, sf_dir, tmp_path):

@@ -165,6 +165,42 @@ def test_orders_date_normalizes_long_reads(spark, tmp_path, variant):
     assert row["o_orderdate"].replace(tzinfo=None) == _WALL, variant
 
 
+def test_run_jobs_bounded_pool_order_and_first_error():
+    """io.run_jobs with ``max_workers``: never more thunks in flight than
+    the cap, results in argument order, and after a failure the queued
+    thunks never start while the failure (the first in argument order)
+    is re-raised once the running ones finish."""
+    import threading
+    import time
+
+    lock = threading.Lock()
+    state = {"running": 0, "peak": 0, "started": []}
+
+    def job(i, fail=False):
+        def run():
+            with lock:
+                state["running"] += 1
+                state["peak"] = max(state["peak"], state["running"])
+                state["started"].append(i)
+            time.sleep(0.05)
+            with lock:
+                state["running"] -= 1
+            if fail:
+                raise ValueError(f"job {i}")
+            return i
+
+        return run
+
+    assert io.run_jobs(*[job(i) for i in range(8)], max_workers=3) == list(range(8))
+    assert state["peak"] == 3
+    assert io.run_jobs() == [] and io.run_jobs(job(9)) == [9]
+
+    state["started"].clear()
+    with pytest.raises(ValueError, match="job 0"):
+        io.run_jobs(job(0, fail=True), job(1, fail=True), job(2), job(3), max_workers=2)
+    assert sorted(state["started"]) == [0, 1]
+
+
 def test_build_lock_serializes_racing_rebuilds(tmp_path):
     """io.build_lock is the guard that keeps two sessions on one sf_dir
     from rmtree-ing each other's in-flight /tmp cache build (ADVICE r6).

@@ -838,3 +838,24 @@ def test_ann_index_query_runs_without_python_or_rdd_scans(spark, sf_dir):
         "PartitionFilters" in l and "bucket" in l and "IN" in l.upper()
         for l in p.splitlines()
     ), p
+
+
+def test_scan_jdbc_fallback_extract_has_no_bookkeeping_jobs(spark, sf_dir):
+    """The fallback SQLite extract spreads its rowid slices with
+    ``spark.range`` (one slice per partition) and reads them in a
+    ``mapInArrow`` task: no driver-built Python relation to scan
+    (``Scan ExistingRDD``) and no round-robin shuffle to spread it.
+    Checked on the EXECUTED plan."""
+    from sqlite_to_clickhouse_spark.sources.sqlite import jdbc_available
+
+    if jdbc_available(spark):
+        pytest.skip("a SQLite JDBC driver is on the classpath: no fallback extract")
+    df = _Q["scan_jdbc"].fn(spark, sf_dir)
+    assert df.collect()
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    p = buf.getvalue()
+    for node in ("Scan ExistingRDD", "RoundRobinPartitioning"):
+        assert node not in p, f"{node} in the extract plan:\n{p}"
+    assert "MapInArrow" in p, p
