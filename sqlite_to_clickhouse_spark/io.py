@@ -1,4 +1,6 @@
-"""Fixture-table loaders.
+"""Fixture-table loaders, the shared /tmp generation cache, and the
+manifest-committed store protocol with the index-store core under the
+three persisted indexes (tombstones, clones, snapshots, fingerprints).
 
 All driver tables are one parquet file per table under an sf dir
 (TESTDATA.md). Parquet scans give Catalyst predicate pushdown, column
@@ -287,11 +289,12 @@ def ensure_generation(kind: str, key: str, fp: str, build, *, force: bool = Fals
 #     double-append nor the ADVICE-r10 silent-drop window exists.
 #
 # File paths inside a manifest are RELATIVE to the store root, so a
-# file-level clone of the whole store (shutil.copytree — how the streaming
-# ops snapshot the shared cached index) remains a valid store at its new
-# location, manifests included.  (Absolute paths are also honored — they
-# resolve verbatim — which is how a shallow clone references another
-# table's files without copying them.)
+# file-level clone of the whole store (``clone_store`` — how every op that
+# appends to or deletes from an index snapshots the shared cached
+# generation) remains a valid store at its new location, manifests
+# included.  (Absolute paths are also honored — they resolve verbatim —
+# which is how a shallow clone references another table's files without
+# copying them.)
 #
 # Writer contract: ONE writer per store at a time (foreachBatch runs
 # micro-batches sequentially; batch jobs own their clone).  build_lock
@@ -720,6 +723,126 @@ def read_relation(
     if partitioned:
         reader = reader.option("basePath", os.path.join(root, relation))
     return reader.parquet(*files)
+
+
+def read_relation_or_empty(
+    spark: SparkSession,
+    root: str,
+    relation: str,
+    schema: str,
+    *,
+    partitioned: bool = False,
+) -> DataFrame:
+    """``read_relation``, except that a relation with no committed files
+    (an empty-corpus build: an empty partitionBy write emits none) reads
+    as an empty frame of the declared schema."""
+    df = read_relation(spark, root, relation, schema, partitioned=partitioned)
+    return df if df is not None else spark.createDataFrame([], schema)
+
+
+# ---------------------------------------------------------------------------
+# Index-store core: the store decisions the three persisted indexes (the
+# MinHash band index, the ER catalog, IVF-PQ) share — source fingerprint,
+# snapshot publish, clone, tombstones.  Each family keeps only its own
+# math (banding and re-election, CC relabelling, quantizers).
+# ---------------------------------------------------------------------------
+
+TOMBSTONES = "tombstones"
+
+
+def source_fingerprint(*paths: str) -> str:
+    """``size:mtime_ns`` of each source file (``missing`` when absent),
+    joined by ``|``.  A regenerated fixture yields a new fingerprint,
+    hence a new generation — /tmp may outlive the fixture, and a stale
+    index would silently serve the previous data."""
+    fps = []
+    for p in paths:
+        try:
+            st = os.stat(p)
+            fps.append(f"{st.st_size}:{st.st_mtime_ns}")
+        except OSError:
+            fps.append("missing")
+    return "|".join(fps)
+
+
+def publish_snapshot(
+    root: str,
+    relations,
+    *,
+    meta: "dict | None" = None,
+    source: "str | None" = None,
+) -> str:
+    """Commit a freshly written store: one manifest listing every data
+    file on disk under ``relations``.  From here on readers resolve
+    manifests, never directory listings.  ``source`` is the store a
+    compaction read: its applied-epoch chain carries over, so a stream
+    swapped onto the compacted store still skips the epochs it already
+    applied.  Returns the version name."""
+    return manifest_commit(
+        root,
+        {rel: relation_data_files(root, rel) for rel in relations},
+        meta=meta,
+        applied_seed=manifest_applied_chain(source) if source else None,
+    )
+
+
+def clone_store(src: str, prefix: str) -> str:
+    """Private mutable copy of the store at ``src``, at
+    ``<mkdtemp(prefix)>/idx``.  Manifest paths are root-relative, so the
+    file copy is a valid store, history included (the production
+    snapshot analog: near-free copy-on-write on object stores).  The one
+    place an index clone is made."""
+    import shutil
+    import tempfile
+
+    dst = os.path.join(tempfile.mkdtemp(prefix=prefix), "idx")
+    shutil.copytree(src, dst)
+    return dst
+
+
+def read_tombstones(
+    spark: SparkSession, root: str, schema: str
+) -> "DataFrame | None":
+    """The store's committed tombstones (one key column, declared by
+    ``schema``, e.g. ``"doc_id long"``), or None when no delete was ever
+    committed — the relation does not exist until then, so an index that
+    never saw a delete reads with no anti-join in its plan.
+    Manifest-resolved: a delete whose publish did not land is invisible,
+    exactly like an uncommitted append."""
+    return read_relation(spark, root, TOMBSTONES, schema)
+
+
+def mask_tombstones(
+    df: DataFrame, tomb: "DataFrame | None", on: "str | None" = None
+) -> DataFrame:
+    """``df`` without its tombstoned rows: a left-anti join of ``df``'s
+    ``on`` column (default: the tombstone key's name) against the
+    tombstone key.  ``tomb`` None (no committed delete) returns ``df``
+    itself, with no join in the plan."""
+    if tomb is None:
+        return df
+    key = tomb.columns[0]
+    on = on or key
+    if on != key:
+        from pyspark.sql import functions as F
+
+        tomb = tomb.select(F.col(key).alias(on))
+    return df.join(tomb, on, "left_anti")
+
+
+def write_tombstones(root: str, ids: DataFrame, id_col: str, schema: str) -> None:
+    """Commit a delete: append ``ids[id_col]``, cast to the key of
+    ``schema``, as new files under ``tombstones/`` and publish them in one
+    manifest commit.  No committed file is rewritten, so concurrent
+    readers are never invalidated; compaction drops the tombstoned rows
+    and clears the relation."""
+    from pyspark.sql import functions as F
+
+    key, key_type = schema.split()
+    with manifest_append(root, [TOMBSTONES]):
+        ids.select(F.col(id_col).cast(key_type).alias(key)).write.mode(
+            "append"
+        ).parquet(os.path.join(root, TOMBSTONES))
 
 
 TABLES = (

@@ -433,13 +433,11 @@ def minhash_bands_tokens(
             for i in range(n_bands)
         ]
     )
-    # No persist: the band table feeds both sides of the self-join, and the
-    # r1-era persist here was a 4× win when signatures were an interpreted
-    # md5-per-seed expression tree. After the affine+Arrow kernel rework the
-    # subtree is cheap to recompute, and an r5 A/B at 10× measured the
-    # persist at 73 s vs 32 s without (materialization + InMemoryRelation
-    # scan costs dominate recompute; at 1× the difference is noise). Let
-    # both join branches pipeline from the scan.
+    # No persist: each corpus-side plan consumes the band table once (one
+    # _bucket_pairs pass, or one index write), so a cache would only add
+    # materialization and an InMemoryRelation scan (an r5 A/B at 10×
+    # measured a persist here at 73 s vs 32 s without).  The batch-sized
+    # lookup, which fans its bands out, persists its own copy.
     bands = sigs.select("__id", F.explode(band_keys).alias("bk"))
     tokh = toks.select(
         "__id",
@@ -739,19 +737,7 @@ _IDX_SETS_SCHEMA = "skey array<bigint>, rep_id long"
 _IDX_RELATIONS = ("bands", "tokens", "sets")
 
 
-def _read_idx(
-    spark: SparkSession,
-    path: str,
-    rel: str,
-    schema: str,
-    *,
-    partitioned: bool = False,
-) -> DataFrame:
-    """Manifest-resolved scan of one index relation; an unwritten
-    relation (empty-corpus build: an empty partitionBy write emits no
-    files) reads as an empty frame with the declared schema."""
-    df = gio.read_relation(spark, path, rel, schema, partitioned=partitioned)
-    return df if df is not None else spark.createDataFrame([], schema)
+_read_idx = gio.read_relation_or_empty
 
 
 def _band_frame(bands: DataFrame) -> DataFrame:
@@ -842,13 +828,7 @@ def minhash_index_build(
             F.col("__set").alias("skey"), F.col("__rep").alias("rep_id")
         ).write.parquet(os.path.join(path, "sets")),
     )
-    # Publish the initial snapshot: one atomic manifest listing every
-    # relation's files — from here on, readers resolve manifests, never
-    # directory listings (io.py manifest protocol, VERDICT r9 item 4).
-    gio.manifest_commit(
-        path,
-        {rel: gio.relation_data_files(path, rel) for rel in _IDX_RELATIONS},
-    )
+    gio.publish_snapshot(path, _IDX_RELATIONS)
 
 
 def minhash_index_append(
@@ -959,15 +939,6 @@ def minhash_index_append(
 _IDX_TOMB_SCHEMA = "doc_id long"
 
 
-def _read_tombstones(spark: SparkSession, path: str) -> "DataFrame | None":
-    """The index's tombstone relation, or None when no delete has ever
-    been COMMITTED (the overwhelmingly common case — the None keeps the
-    no-delete lookup plan byte-identical to pre-tombstone rounds).
-    Manifest-resolved: a delete whose manifest publish didn't land is
-    invisible, exactly like an uncommitted append."""
-    return gio.read_relation(spark, path, "tombstones", _IDX_TOMB_SCHEMA)
-
-
 def minhash_index_delete(ids: DataFrame, path: str, *, id_col: str = "doc_id") -> None:
     """Delete docs from the index by TOMBSTONE — the GDPR-shape
     counterpart of maintenance_delete_rows (etl.py) for the dedup index:
@@ -982,10 +953,7 @@ def minhash_index_delete(ids: DataFrame, path: str, *, id_col: str = "doc_id") -
     (minhash_index_compact) physically drops tombstoned rows and clears
     the tombstone relation.  Contract: doc ids are never reused — a
     tombstone is forever until compaction."""
-    with gio.manifest_append(path, ["tombstones"]):
-        ids.select(F.col(id_col).cast("long").alias("doc_id")).write.mode(
-            "append"
-        ).parquet(os.path.join(path, "tombstones"))
+    gio.write_tombstones(path, ids, id_col, _IDX_TOMB_SCHEMA)
 
 
 def minhash_index_dedup(
@@ -1099,9 +1067,8 @@ def minhash_index_dedup(
     # clusters drop out in the verify inner join.  Compaction
     # (minhash_index_compact) physically drops tombstoned rows and
     # re-labels clusters by their live minimum.
-    tomb = _read_tombstones(spark, path)
-    if tomb is not None:
-        idx_tok = idx_tok.join(tomb, "doc_id", "left_anti")
+    tomb = gio.read_tombstones(spark, path, _IDX_TOMB_SCHEMA)
+    idx_tok = gio.mask_tombstones(idx_tok, tomb)
 
     # batch-rep × index-rep candidates (sides kept distinct: id_a = batch
     # rep, id_b = index rep — the token stores and expansions differ).
@@ -1202,14 +1169,7 @@ def _incr_index_path(
     reused across invocations — amortizing the build is the point of the
     index.  ``force=True``: a build is a fresh build (new generation,
     CURRENT swings, concurrent readers of the old one are untouched)."""
-    from sqlite_to_clickhouse_spark.io import ensure_generation
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        fp = "missing"
+    fp = gio.source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
     # "|m1": manifest-committed layout (r10) — a cached pre-manifest
     # generation fingerprints differently and is rebuilt, never half-read.
     # "|c1": pb-clustered bands layout (r12) — a cached generation built
@@ -1223,7 +1183,7 @@ def _incr_index_path(
             _doc_tokens(corpus), "doc_id", "tk", gen, hash_mode=hash_mode
         )
 
-    return ensure_generation("minhash_idx", sf_dir, fp, _build, force=force)
+    return gio.ensure_generation("minhash_idx", sf_dir, fp, _build, force=force)
 
 
 @register(
@@ -1254,13 +1214,27 @@ def dedup_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing — so a banding/clustering/filter drift on the WRITTEN files
     (not just in-memory) breaks the gate."""
     hash_mode = spark.conf.get("spark.graft.minhash.hash", "md5")
-    path = _incr_index_path(spark, sf_dir, hash_mode, force=True)
-    band_rows = _read_idx(spark, path, "bands", _IDX_BANDS_SCHEMA, partitioned=True).count()
-    token_rows = _read_idx(spark, path, "tokens", _IDX_TOKENS_SCHEMA).count()
-    set_rows = _read_idx(spark, path, "sets", _IDX_SETS_SCHEMA).count()
+    return _idx_counts(spark, _incr_index_path(spark, sf_dir, hash_mode, force=True))
+
+
+def _idx_counts(spark: SparkSession, path: str) -> DataFrame:
+    """(band_rows, token_rows, set_rows) of a committed index: three
+    independent count jobs, overlapped from driver threads (guide §2.6)
+    instead of paying three sequential job scheduling/teardown tails."""
+    counts = gio.run_jobs(
+        *[
+            (lambda r, s: lambda: _read_idx(
+                spark, path, r, s, partitioned=r == "bands"
+            ).count())(rel, schema)
+            for rel, schema in (
+                ("bands", _IDX_BANDS_SCHEMA),
+                ("tokens", _IDX_TOKENS_SCHEMA),
+                ("sets", _IDX_SETS_SCHEMA),
+            )
+        ]
+    )
     return spark.createDataFrame(
-        [(band_rows, token_rows, set_rows)],
-        "band_rows bigint, token_rows bigint, set_rows bigint",
+        [tuple(counts)], "band_rows bigint, token_rows bigint, set_rows bigint"
     )
 
 
@@ -1314,9 +1288,9 @@ def minhash_index_compact(spark: SparkSession, path: str, dst: str) -> None:
     bands = _read_idx(spark, path, "bands", _IDX_BANDS_SCHEMA, partitioned=True)
     tokens = _read_idx(spark, path, "tokens", _IDX_TOKENS_SCHEMA)
     sets = _read_idx(spark, path, "sets", _IDX_SETS_SCHEMA)
-    tomb = _read_tombstones(spark, path)
+    tomb = gio.read_tombstones(spark, path, _IDX_TOMB_SCHEMA)
     if tomb is not None:
-        tokens = tokens.join(tomb, "doc_id", "left_anti")
+        tokens = gio.mask_tombstones(tokens, tomb)
         # old cluster label -> min live member (re-election); inner joins
         # below drop fully-deleted clusters from every relation.
         remap = tokens.groupBy("rep_id").agg(F.min("doc_id").alias("__new"))
@@ -1348,15 +1322,9 @@ def minhash_index_compact(spark: SparkSession, path: str, dst: str) -> None:
         _write_rel("tokens", tokens),
         _write_rel("sets", sets),
     )
-    # The compacted store's initial snapshot: tombstones physically
-    # applied, so the manifest lists no tombstone relation at all.  The
-    # source's applied-epoch chain carries over — a stream swapped onto
-    # the compacted store must still skip epochs it already ingested.
-    gio.manifest_commit(
-        dst,
-        {rel: gio.relation_data_files(dst, rel) for rel in _IDX_RELATIONS},
-        applied_seed=gio.manifest_applied_chain(path),
-    )
+    # Tombstones are physically applied: the compacted snapshot lists no
+    # tombstone relation at all.
+    gio.publish_snapshot(dst, _IDX_RELATIONS, source=path)
 
 
 @register(
@@ -1395,41 +1363,18 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed set must join that cluster, never spawn a duplicate
     representative); file-count collapse and lookup-equality are pinned
     in tests/test_minhash_property.py."""
-    import tempfile
-
-    import shutil
-
     hash_mode = spark.conf.get("spark.graft.minhash.hash", "md5")
-    docs = table(spark, sf_dir, "documents")
-    toks = _doc_tokens(docs)
-    base = tempfile.mkdtemp(prefix="graft_idx_compact_")
-    grown = os.path.join(base, "grown")
-    compacted = os.path.join(base, "compacted")
-    # Clone the shared corpus generation (appends below mutate it); a
-    # file clone is the production snapshot, not a re-band of the corpus.
-    shutil.copytree(_incr_index_path(spark, sf_dir, hash_mode), grown)
+    toks = _doc_tokens(table(spark, sf_dir, "documents"))
+    # A file clone of the shared corpus generation (appends below mutate
+    # it) is the production snapshot, not a re-band of the corpus.
+    grown = _clone_incr_index(spark, sf_dir, hash_mode)
+    compacted = os.path.join(os.path.dirname(grown), "compacted")
     minhash_index_append(
         toks.filter(_incr_batch_pred()), "doc_id", "tk", grown,
         hash_mode=hash_mode,
     )
     minhash_index_compact(spark, grown, compacted)
-    # Three independent count jobs over the compacted relations — overlap
-    # them from driver threads (guide §2.6) instead of paying three
-    # sequential job scheduling/teardown tails.
-    counts = gio.run_jobs(
-        *[
-            (lambda r, s: lambda: spark.read.schema(s)
-             .parquet(os.path.join(compacted, r)).count())(rel, schema)
-            for rel, schema in (
-                ("bands", _IDX_BANDS_SCHEMA),
-                ("tokens", _IDX_TOKENS_SCHEMA),
-                ("sets", _IDX_SETS_SCHEMA),
-            )
-        ]
-    )
-    return spark.createDataFrame(
-        [tuple(counts)], "band_rows bigint, token_rows bigint, set_rows bigint"
-    )
+    return _idx_counts(spark, compacted)
 
 
 DEL_MOD, DEL_REM = 30, 3  # registered delete set: corpus docs, doc_id % 30 == 3
@@ -1438,16 +1383,8 @@ DEL_MOD, DEL_REM = 30, 3  # registered delete set: corpus docs, doc_id % 30 == 3
 
 
 def _clone_incr_index(spark: SparkSession, sf_dir: str, hash_mode: str) -> str:
-    """Private mutable copy of the shared corpus index generation (file
-    clone — the production snapshot analog): deletes and appends mutate,
-    so the cached generation other ops reuse must never be the target."""
-    import shutil
-    import tempfile
-
-    src = _incr_index_path(spark, sf_dir, hash_mode)
-    dst = os.path.join(tempfile.mkdtemp(prefix="graft_idx_del_"), "idx")
-    shutil.copytree(src, dst)
-    return dst
+    """Private mutable copy of the shared corpus index generation."""
+    return gio.clone_store(_incr_index_path(spark, sf_dir, hash_mode), "graft_idx_")
 
 
 def _deleted_ids(docs: DataFrame) -> DataFrame:
@@ -1523,30 +1460,12 @@ def dedup_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs excluded — a leak of any tombstoned row (or loss of any live
     one) breaks the gate.  Tombstone-clearing and bit-level equivalence
     to rebuild-without are pinned in tests/test_minhash_property.py."""
-    import tempfile
-
     hash_mode = spark.conf.get("spark.graft.minhash.hash", "md5")
     idx = _clone_incr_index(spark, sf_dir, hash_mode)
-    docs = table(spark, sf_dir, "documents")
-    minhash_index_delete(_deleted_ids(docs), idx)
-    compacted = os.path.join(tempfile.mkdtemp(prefix="graft_idx_delc_"), "idx")
+    minhash_index_delete(_deleted_ids(table(spark, sf_dir, "documents")), idx)
+    compacted = os.path.join(os.path.dirname(idx), "compacted")
     minhash_index_compact(spark, idx, compacted)
-    # Independent count jobs, overlapped (guide §2.6) — same as
-    # dedup_index_compact's closing counts.
-    counts = gio.run_jobs(
-        *[
-            (lambda r, s: lambda: spark.read.schema(s)
-             .parquet(os.path.join(compacted, r)).count())(rel, schema)
-            for rel, schema in (
-                ("bands", _IDX_BANDS_SCHEMA),
-                ("tokens", _IDX_TOKENS_SCHEMA),
-                ("sets", _IDX_SETS_SCHEMA),
-            )
-        ]
-    )
-    return spark.createDataFrame(
-        [tuple(counts)], "band_rows bigint, token_rows bigint, set_rows bigint"
-    )
+    return _idx_counts(spark, compacted)
 
 
 def _simhash_expr(tokens_col):

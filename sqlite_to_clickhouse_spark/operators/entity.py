@@ -44,6 +44,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sqlite_to_clickhouse_spark import io as gio
 from sqlite_to_clickhouse_spark.io import table
 from sqlite_to_clickhouse_spark.registry import register
 
@@ -768,20 +769,12 @@ _ER_EDGE_SCHEMA = "name_a string, name_b string"
 _ER_TOMB_SCHEMA = "nm string"
 
 
-def _er_read(spark, path, rel, schema):
-    from sqlite_to_clickhouse_spark import io as gio
-
-    df = gio.read_relation(spark, path, rel, schema)
-    return df if df is not None else spark.createDataFrame([], schema)
-
-
 def er_index_build(names: DataFrame, path: str) -> None:
     """Build + persist the catalog ER index at ``path``: df-capped
     posting lists, stop keys, the verified edit-distance pair graph, and
     the entity map from ONE connected-components run — the clustering
     cost er_incremental_match used to pay per call, paid once here.
     Publishes the initial snapshot via one atomic manifest commit."""
-    from sqlite_to_clickhouse_spark import io as gio
     from sqlite_to_clickhouse_spark.operators.dedup import connected_components
 
     spark = names.sparkSession
@@ -818,11 +811,7 @@ def er_index_build(names: DataFrame, path: str) -> None:
         lambda: pairs.write.parquet(os.path.join(path, "edges")),
     )
     pairs.unpersist()
-    gio.manifest_commit(
-        path,
-        {rel: gio.relation_data_files(path, rel) for rel in _ER_IDX_RELATIONS},
-        meta={"gen": 0},
-    )
+    gio.publish_snapshot(path, _ER_IDX_RELATIONS, meta={"gen": 0})
 
 
 def er_index_entities(spark: SparkSession, path: str) -> DataFrame:
@@ -832,26 +821,19 @@ def er_index_entities(spark: SparkSession, path: str) -> DataFrame:
     is one shuffle of a distinct-names-sized relation."""
     from pyspark.sql import Window
 
-    from sqlite_to_clickhouse_spark import io as gio
-
-    ent = _er_read(spark, path, "entities", _ER_ENT_SCHEMA)
+    ent = gio.read_relation_or_empty(spark, path, "entities", _ER_ENT_SCHEMA)
     w = Window.partitionBy("nm").orderBy(F.col("gen").desc())
     cur = (
         ent.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select("nm", "entity_id")
     )
-    tomb = gio.read_relation(spark, path, "tombstones", _ER_TOMB_SCHEMA)
-    if tomb is not None:
-        cur = cur.join(tomb, "nm", "left_anti")
-    return cur
+    return gio.mask_tombstones(cur, gio.read_tombstones(spark, path, _ER_TOMB_SCHEMA))
 
 
 def _er_next_gen(spark: SparkSession, path: str) -> int:
     """Next entities generation number, from the commit metadata (one
     manifest read, no data scan)."""
-    from sqlite_to_clickhouse_spark import io as gio
-
     m = gio.manifest_read(path) or {}
     return int(m.get("meta", {}).get("gen", 0)) + 1
 
@@ -868,13 +850,11 @@ def er_index_match(
     resolve (anti-joined at the posting read)."""
     from pyspark.sql import Window
 
-    from sqlite_to_clickhouse_spark import io as gio
-
     bat = batch_names.select("nm").distinct()
-    postings = _er_read(spark, path, "postings", _ER_POST_SCHEMA)
-    tomb = gio.read_relation(spark, path, "tombstones", _ER_TOMB_SCHEMA)
-    if tomb is not None:
-        postings = postings.join(tomb, "nm", "left_anti")
+    postings = gio.mask_tombstones(
+        gio.read_relation_or_empty(spark, path, "postings", _ER_POST_SCHEMA),
+        gio.read_tombstones(spark, path, _ER_TOMB_SCHEMA),
+    )
     bwords = (
         bat.select(F.col("nm").alias("bname"), F.explode(F.split("nm", " ")).alias("w"))
         .filter(F.col("w") != "")
@@ -954,7 +934,6 @@ def er_index_append(
     nothing) and every nm-keyed join in the lifecycle (blocking,
     re-label, un-tombstone) would silently never match it, so admitting
     it would create an unreachable tombstone/entities row."""
-    from sqlite_to_clickhouse_spark import io as gio
     from sqlite_to_clickhouse_spark.operators.dedup import connected_components
 
     bat = new_names.select("nm").filter(F.col("nm").isNotNull()).distinct()
@@ -967,11 +946,10 @@ def er_index_append(
     owned_cur = cur is None
     if owned_cur:
         cur = er_index_entities(spark, path).persist()
-    postings = _er_read(spark, path, "postings", _ER_POST_SCHEMA)
-    tomb = gio.read_relation(spark, path, "tombstones", _ER_TOMB_SCHEMA)
-    if tomb is not None:
-        postings = postings.join(tomb, "nm", "left_anti")
-    stop = _er_read(spark, path, "stopkeys", _ER_STOP_SCHEMA)
+    postings = gio.read_relation_or_empty(spark, path, "postings", _ER_POST_SCHEMA)
+    tomb = gio.read_tombstones(spark, path, _ER_TOMB_SCHEMA)
+    postings = gio.mask_tombstones(postings, tomb)
+    stop = gio.read_relation_or_empty(spark, path, "stopkeys", _ER_STOP_SCHEMA)
 
     bwords = (
         bat.select("nm", F.explode(F.split("nm", " ")).alias("w"))
@@ -1135,8 +1113,6 @@ def er_index_delete(spark: SparkSession, del_names: DataFrame, path: str) -> Non
     (tombstone-bounded, never catalog-bounded), and every survivor whose
     entity changed gets a fresh entities row at the next gen — all
     published in the same atomic commit as the tombstones."""
-    from sqlite_to_clickhouse_spark import io as gio
-
     from sqlite_to_clickhouse_spark.operators.dedup import connected_components
 
     # NULL is not an entity name (same contract as er_index_append,
@@ -1155,7 +1131,7 @@ def er_index_delete(spark: SparkSession, del_names: DataFrame, path: str) -> Non
         .select("nm")
         .join(dels, "nm", "left_anti")
     )
-    edges = _er_read(spark, path, "edges", _ER_EDGE_SCHEMA)
+    edges = gio.read_relation_or_empty(spark, path, "edges", _ER_EDGE_SCHEMA)
     sub_edges = (
         edges.join(
             survivors.select(F.col("nm").alias("name_a")).distinct(), "name_a", "semi"
@@ -1200,19 +1176,15 @@ def er_index_compact(spark: SparkSession, path: str, dst: str) -> None:
     stopkeys copy over, and the compacted snapshot lists no tombstone
     relation at all — bit-identical reads to the tombstoned store
     (pinned by the registered delete_compact gate)."""
-    from sqlite_to_clickhouse_spark import io as gio
-
     cur = er_index_entities(spark, path)  # LWW + tombstones applied
-    postings = _er_read(spark, path, "postings", _ER_POST_SCHEMA)
-    edges = _er_read(spark, path, "edges", _ER_EDGE_SCHEMA)
-    stop = _er_read(spark, path, "stopkeys", _ER_STOP_SCHEMA)
-    tomb = gio.read_relation(spark, path, "tombstones", _ER_TOMB_SCHEMA)
+    postings = gio.read_relation_or_empty(spark, path, "postings", _ER_POST_SCHEMA)
+    edges = gio.read_relation_or_empty(spark, path, "edges", _ER_EDGE_SCHEMA)
+    stop = gio.read_relation_or_empty(spark, path, "stopkeys", _ER_STOP_SCHEMA)
+    tomb = gio.read_tombstones(spark, path, _ER_TOMB_SCHEMA)
     if tomb is not None:
-        postings = postings.join(tomb, "nm", "left_anti")
-        edges = (
-            edges.join(
-                tomb.select(F.col("nm").alias("name_a")), "name_a", "left_anti"
-            ).join(tomb.select(F.col("nm").alias("name_b")), "name_b", "left_anti")
+        postings = gio.mask_tombstones(postings, tomb)
+        edges = gio.mask_tombstones(
+            gio.mask_tombstones(edges, tomb, "name_a"), tomb, "name_b"
         ).select("name_a", "name_b")
     # Independent compacted-relation rewrites — overlap the jobs
     # (guide §2.6; all four read committed files, no shared lineage).
@@ -1223,14 +1195,7 @@ def er_index_compact(spark: SparkSession, path: str, dst: str) -> None:
         lambda: stop.write.parquet(os.path.join(dst, "stopkeys")),
         lambda: edges.write.parquet(os.path.join(dst, "edges")),
     )
-    # applied_seed: the compacted store inherits the source's applied-
-    # epoch chain, so a writer swapped onto it keeps exactly-once.
-    gio.manifest_commit(
-        dst,
-        {rel: gio.relation_data_files(dst, rel) for rel in _ER_IDX_RELATIONS},
-        meta={"gen": 0},
-        applied_seed=gio.manifest_applied_chain(path),
-    )
+    gio.publish_snapshot(dst, _ER_IDX_RELATIONS, meta={"gen": 0}, source=path)
 
 
 def _er_catalog_names(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1259,35 +1224,21 @@ def _er_index_path(spark: SparkSession, sf_dir: str, *, force: bool = False) -> 
     """Valid persisted catalog ER index (immutable generation, shared
     across invocations — amortizing the one clustering run is the whole
     point of the store)."""
-    from sqlite_to_clickhouse_spark.io import ensure_generation
-
-    src = os.path.join(sf_dir, "part.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        fp = "missing"
     fp = (
-        f"{fp}|cap{_ER_BLOCK_DF_CAP}|d{_ER_MAXDIST}"
+        gio.source_fingerprint(os.path.join(sf_dir, "part.parquet"))
+        + f"|cap{_ER_BLOCK_DF_CAP}|d{_ER_MAXDIST}"
         f"|nmb{_ER_IDX_BUCKET_MOD}r{_ER_IDX_BUCKET_REM}|v2"
     )
 
     def _build(gen: str) -> None:
         er_index_build(_er_catalog_names(spark, sf_dir), gen)
 
-    return ensure_generation("er_idx", sf_dir, fp, _build, force=force)
+    return gio.ensure_generation("er_idx", sf_dir, fp, _build, force=force)
 
 
 def _clone_er_index(spark: SparkSession, sf_dir: str) -> str:
-    """Private mutable copy of the shared catalog index generation
-    (appends/deletes mutate; the cached generation must stay clean)."""
-    import shutil
-    import tempfile
-
-    src = _er_index_path(spark, sf_dir)
-    dst = os.path.join(tempfile.mkdtemp(prefix="er_idx_"), "idx")
-    shutil.copytree(src, dst)
-    return dst
+    """Private mutable copy of the shared catalog index generation."""
+    return gio.clone_store(_er_index_path(spark, sf_dir), "er_idx_")
 
 
 _ER_SETMATCH_T = 0.5  # token-set Jaccard acceptance threshold
@@ -1497,7 +1448,7 @@ def er_index_build_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _er_index_path(spark, sf_dir, force=True)
     ents = er_index_entities(spark, path)
     pw = (
-        _er_read(spark, path, "postings", _ER_POST_SCHEMA)
+        gio.read_relation_or_empty(spark, path, "postings", _ER_POST_SCHEMA)
         .groupBy("nm")
         .agg(F.count(F.lit(1)).alias("nw"))
     )
@@ -1684,13 +1635,9 @@ def er_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     directions via exceptAll), the compacted snapshot must list no
     tombstone relation, and the surviving name/entity counts are
     differentially gated against the stored-edge delete oracle."""
-    from sqlite_to_clickhouse_spark import io as gio
-
     idx = _clone_er_index(spark, sf_dir)
     er_index_delete(spark, _er_registered_dels(spark, sf_dir), idx)
-    import tempfile
-
-    dst = os.path.join(tempfile.mkdtemp(prefix="er_compact_"), "idx")
+    dst = os.path.join(os.path.dirname(idx), "compacted")
     er_index_compact(spark, idx, dst)
     # Both entity views fan into multiple verification jobs (two
     # exceptAll directions + two aggregates) and each evaluation repeats

@@ -1717,7 +1717,7 @@ def ann_index_build(
                       "sub": pa.array([], pa.list_(pa.float64()))}),
             os.path.join(path, "codebooks", "part-0.parquet"),
         )
-        _commit_ann_snapshot(path)
+        gio.publish_snapshot(path, _ANN_RELATIONS)
         return spark.createDataFrame(
             [("codes", 0), ("centroids", 0), ("codebooks", 0)],
             "component STRING, n_rows BIGINT",
@@ -1766,7 +1766,7 @@ def ann_index_build(
         os.path.join(path, "codebooks", "part-0.parquet"),
     )
 
-    _commit_ann_snapshot(path)
+    gio.publish_snapshot(path, _ANN_RELATIONS)
     report = [
         ("codes", _read_ann_codes(spark, path).count()),
         ("centroids", len(cent_ids)),
@@ -1778,21 +1778,6 @@ def ann_index_build(
 _ANN_RELATIONS = ("codes", "centroids", "codebooks")
 
 
-def _commit_ann_snapshot(path: str, applied_from: "str | None" = None) -> None:
-    """Publish the store's initial manifest: one atomic commit listing
-    every relation's files (io.py manifest protocol, VERDICT r9 item 4).
-    From here on readers resolve manifests, never directory listings.
-    ``applied_from`` carries a source store's applied-epoch chain into
-    the fresh manifest (compaction)."""
-    gio.manifest_commit(
-        path,
-        {rel: gio.relation_data_files(path, rel) for rel in _ANN_RELATIONS},
-        applied_seed=(
-            gio.manifest_applied_chain(applied_from) if applied_from else None
-        ),
-    )
-
-
 def _read_ann_codes(spark: SparkSession, path: str) -> DataFrame:
     """Manifest-resolved scan of the codes relation (``basePath`` so the
     ``bucket=`` partition column survives the explicit file-list read —
@@ -1801,16 +1786,6 @@ def _read_ann_codes(spark: SparkSession, path: str) -> DataFrame:
     if df is None:  # no committed snapshot / no code files
         return spark.createDataFrame([], "vec_id bigint, bucket bigint, pq_code bigint")
     return df
-
-
-def _read_ann_tombstones(
-    spark: SparkSession, path: str, id_col: str
-) -> "DataFrame | None":
-    """The ANN index's tombstone relation, or None when no delete has
-    ever been COMMITTED (the common case — the None keeps the no-delete
-    query plan unchanged).  Manifest-resolved: an uncommitted delete is
-    invisible, exactly like an uncommitted append."""
-    return gio.read_relation(spark, path, "tombstones", f"{id_col} long")
 
 
 def ann_index_delete(ids: DataFrame, path: str, *, id_col: str = "vec_id") -> None:
@@ -1825,10 +1800,7 @@ def ann_index_delete(ids: DataFrame, path: str, *, id_col: str = "vec_id") -> No
     and every surviving code row are untouched.  ann_index_compact
     physically drops tombstoned rows and clears the relation.  Contract:
     vector ids are never reused."""
-    with gio.manifest_append(path, ["tombstones"]):
-        ids.select(F.col(id_col).cast("long").alias(id_col)).write.mode(
-            "append"
-        ).parquet(os.path.join(path, "tombstones"))
+    gio.write_tombstones(path, ids, id_col, f"{id_col} long")
 
 
 def ann_index_compact(
@@ -1847,10 +1819,10 @@ def ann_index_compact(
     undisturbed."""
     import shutil
 
-    codes = _read_ann_codes(spark, path)
-    tomb = _read_ann_tombstones(spark, path, id_col)
-    if tomb is not None:
-        codes = codes.join(tomb, id_col, "left_anti")
+    codes = gio.mask_tombstones(
+        _read_ann_codes(spark, path),
+        gio.read_tombstones(spark, path, f"{id_col} long"),
+    )
     if codes.limit(1).count() == 0:
         # An empty partitioned write emits no parquet footer, leaving the
         # compacted codes dir schema-less for readers — write the empty
@@ -1866,10 +1838,9 @@ def ann_index_compact(
         )
     for rel in ("centroids", "codebooks"):
         shutil.copytree(os.path.join(path, rel), os.path.join(dst, rel))
-    # Compacted store's initial snapshot: tombstones physically applied,
-    # so no tombstone relation in the manifest at all; the source's
-    # applied-epoch chain carries over.
-    _commit_ann_snapshot(dst, applied_from=path)
+    # Tombstones are physically applied: the compacted snapshot lists no
+    # tombstone relation at all.
+    gio.publish_snapshot(dst, _ANN_RELATIONS, source=path)
 
 
 def ann_index_query(
@@ -1937,11 +1908,10 @@ def _ann_candidates(
     over the survivors; pinned in tests/test_llm_ops.py against
     ann_index_compact's physical rewrite).  No tombstones → no anti-join
     in the plan at all."""
-    codes = _read_ann_codes(spark, path).filter(F.col("bucket").isin(wanted))
-    tomb = _read_ann_tombstones(spark, path, id_col)
-    if tomb is not None:
-        codes = codes.join(tomb, id_col, "left_anti")
-    return codes
+    return gio.mask_tombstones(
+        _read_ann_codes(spark, path).filter(F.col("bucket").isin(wanted)),
+        gio.read_tombstones(spark, path, f"{id_col} long"),
+    )
 
 
 def _load_quantizer(path: str):
@@ -2029,19 +1999,10 @@ def ann_index_append(
 
 
 def _source_fingerprint(sf_dir: str) -> str:
-    """(size, mtime) fingerprint of the embeddings parquet the index was
-    built from — the fixture REGENERATES between driver rounds while /tmp
-    may persist, and a stale index would silently serve neighbors of the
-    previous corpus generation."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        fp = "missing"
-    # "|m1": manifest-committed layout (r10) — a cached pre-manifest
-    # generation fingerprints differently and is rebuilt, never half-read.
-    return fp + "|m1"
+    """Fingerprint of the embeddings parquet the index was built from.
+    "|m1": manifest-committed layout (r10) — a cached pre-manifest
+    generation fingerprints differently and is rebuilt, never half-read."""
+    return gio.source_fingerprint(os.path.join(sf_dir, "embeddings.parquet")) + "|m1"
 
 
 def _ensure_index(spark: SparkSession, sf_dir: str, *, force: bool = False):
@@ -2054,8 +2015,6 @@ def _ensure_index(spark: SparkSession, sf_dir: str, *, force: bool = False):
     Returns ``(path, manifest)``: ``manifest`` is the component→row-count
     dict from the build that ran, or ``None`` when a cached generation
     was reused (no build, no manifest)."""
-    from sqlite_to_clickhouse_spark.io import ensure_generation
-
     fp = _source_fingerprint(sf_dir)
     manifest: dict = {}
 
@@ -2068,7 +2027,7 @@ def _ensure_index(spark: SparkSession, sf_dir: str, *, force: bool = False):
             }
         )
 
-    path = ensure_generation("ann_index", sf_dir, fp, _build, force=force)
+    path = gio.ensure_generation("ann_index", sf_dir, fp, _build, force=force)
     return path, (manifest or None)
 
 
@@ -2164,8 +2123,6 @@ def _ensure_incr_ann_index(spark: SparkSession, sf_dir: str) -> str:
     dedup _incr_index_path pattern.  Registered ops CLONE it before
     appending (appends mutate; the shared generation must stay
     append-free)."""
-    from sqlite_to_clickhouse_spark.io import ensure_generation
-
     fp = (
         _source_fingerprint(sf_dir)
         + f"|annincr|mod{ANN_INCR_MOD}r{ANN_INCR_REM}"
@@ -2175,20 +2132,12 @@ def _ensure_incr_ann_index(spark: SparkSession, sf_dir: str) -> str:
         corpus = table(spark, sf_dir, "embeddings").filter(~_ann_batch_pred())
         ann_index_build(spark, corpus, gen).collect()
 
-    return ensure_generation("ann_incr_idx", sf_dir, fp, _build)
+    return gio.ensure_generation("ann_incr_idx", sf_dir, fp, _build)
 
 
 def _clone_incr_ann_index(spark: SparkSession, sf_dir: str) -> str:
-    """Private mutable copy of the corpus ANN index (file clone — the
-    production snapshot analog, near-free copy-on-write on object
-    stores)."""
-    import shutil
-    import tempfile
-
-    src = _ensure_incr_ann_index(spark, sf_dir)
-    dst = os.path.join(tempfile.mkdtemp(prefix="ann_incr_idx_"), "idx")
-    shutil.copytree(src, dst)
-    return dst
+    """Private mutable copy of the corpus-only ANN index generation."""
+    return gio.clone_store(_ensure_incr_ann_index(spark, sf_dir), "ann_incr_idx_")
 
 
 @register(
@@ -2220,15 +2169,6 @@ def sim_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the batch) and the checks collapse to their build-time
     equivalents."""
     import glob as _glob
-    import hashlib
-
-    def _state_digest(p: str) -> str:
-        h = hashlib.md5()
-        for rel in ("centroids", "codebooks"):
-            for f in sorted(_glob.glob(os.path.join(p, rel, "*.parquet"))):
-                with open(f, "rb") as fh:
-                    h.update(fh.read())
-        return h.hexdigest()
 
     def _code_files(p: str) -> set:
         return {
@@ -2242,18 +2182,18 @@ def sim_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_all = e.count()
     idx = _clone_incr_ann_index(spark, sf_dir)
     pre_files = _code_files(idx)
-    pre_state = _state_digest(idx)
+    pre_state = _quantizer_digest(idx)
     if _load_quantizer(idx) is None:
         # Empty corpus: the append IS a rebuild (see docstring).
         ann_index_build(spark, batch, idx).collect()
         pre_files = set()  # a rebuild replaces the (empty) file set
-        pre_state = _state_digest(idx)
+        pre_state = _quantizer_digest(idx)
     elif batch.limit(1).count():
         ann_index_append(spark, batch, idx)
     post = _read_ann_codes(spark, idx).count() if n_all else 0
     checks = [
         ("codes_rows_eq_corpus_plus_batch", post == n_all),
-        ("quantizer_frozen", _state_digest(idx) == pre_state),
+        ("quantizer_frozen", _quantizer_digest(idx) == pre_state),
         ("append_added_files_only", pre_files <= _code_files(idx)),
     ]
     return spark.createDataFrame(checks, "component STRING, ok BOOLEAN")
@@ -2295,17 +2235,23 @@ def sim_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 ANN_DEL_MOD, ANN_DEL_REM = 30, 3  # registered delete set: vec_id % 30 == 3
 
 
-def _clone_full_index(spark: SparkSession, sf_dir: str) -> str:
-    """Private mutable copy of the shared full-corpus index generation
-    (deletes mutate; the cached generation other ops reuse must never be
-    the target)."""
-    import shutil
-    import tempfile
+def _quantizer_digest(path: str) -> str:
+    """md5 over the centroid and codebook files of the store at ``path``:
+    equal digests mean an unchanged (frozen) quantizer."""
+    import glob as _glob
+    import hashlib
 
-    src, _ = _ensure_index(spark, sf_dir)
-    dst = os.path.join(tempfile.mkdtemp(prefix="ann_del_idx_"), "idx")
-    shutil.copytree(src, dst)
-    return dst
+    h = hashlib.md5()
+    for rel in ("centroids", "codebooks"):
+        for f in sorted(_glob.glob(os.path.join(path, rel, "*.parquet"))):
+            with open(f, "rb") as fh:
+                h.update(fh.read())
+    return h.hexdigest()
+
+
+def _clone_full_index(spark: SparkSession, sf_dir: str) -> str:
+    """Private mutable copy of the shared full-corpus index generation."""
+    return gio.clone_store(_ensure_index(spark, sf_dir)[0], "ann_del_idx_")
 
 
 @register(
@@ -2362,32 +2308,20 @@ def sim_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the tombstone relation must be gone.  Query bit-equality between
     the tombstoned and compacted copies is pinned in
     tests/test_llm_ops.py."""
-    import glob as _glob
-    import hashlib
-    import tempfile
-
-    def _state_digest(p: str) -> str:
-        h = hashlib.md5()
-        for rel in ("centroids", "codebooks"):
-            for f in sorted(_glob.glob(os.path.join(p, rel, "*.parquet"))):
-                with open(f, "rb") as fh:
-                    h.update(fh.read())
-        return h.hexdigest()
-
     idx = _clone_full_index(spark, sf_dir)
     e = table(spark, sf_dir, "embeddings")
     ann_index_delete(
         e.filter(F.col("vec_id") % ANN_DEL_MOD == ANN_DEL_REM).select("vec_id"),
         idx,
     )
-    compacted = os.path.join(tempfile.mkdtemp(prefix="ann_delc_"), "idx")
+    compacted = os.path.join(os.path.dirname(idx), "compacted")
     ann_index_compact(spark, idx, compacted)
     codes_rows = _read_ann_codes(spark, compacted).count()
     return spark.createDataFrame(
         [
             (
                 codes_rows,
-                _state_digest(compacted) == _state_digest(idx),
+                _quantizer_digest(compacted) == _quantizer_digest(idx),
                 # cleared = the compacted snapshot lists no tombstone
                 # relation (manifest-level, matching how readers resolve)
                 not gio.manifest_relation_files(compacted, "tombstones"),

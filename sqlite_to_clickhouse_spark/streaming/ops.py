@@ -621,18 +621,14 @@ _PAIR_SCHEMA = "doc_a bigint, doc_b bigint, jaccard double"
 
 def _clone_corpus_index(spark: SparkSession, sf_dir: str) -> str:
     """CLONE the shared corpus index generation instead of rebuilding:
-    appends mutate the index, so a stream needs its own copy — and a
-    file clone is what a production snapshot is (near-free copy-on-write
-    on object stores), vs re-banding the whole corpus per run."""
-    import shutil
-
+    appends mutate the index, so a stream needs its own copy — a file
+    clone, vs re-banding the whole corpus per run."""
+    from sqlite_to_clickhouse_spark import io as gio
     from sqlite_to_clickhouse_spark.operators.dedup import _incr_index_path
 
     hash_mode = spark.conf.get("spark.graft.minhash.hash", "md5")
     src = _incr_index_path(spark, sf_dir, hash_mode)
-    idx = os.path.join(tempfile.mkdtemp(prefix="stream_incr_idx_"), "idx")
-    shutil.copytree(src, idx)
-    return idx
+    return gio.clone_store(src, "stream_incr_idx_")
 
 
 def _incr_stream_dirs(spark: SparkSession) -> tuple:

@@ -376,6 +376,36 @@ def test_clone_remains_valid_store(tmp_path):
     assert gio.manifest_relation_files(clone, "r") == [os.path.join(clone, f1)]
 
 
+def test_clone_store_mutation_leaves_source_untouched(spark, tmp_path):
+    """A tombstone committed in a clone masks the key in the clone only:
+    the source store still has no tombstones and the same CURRENT
+    manifest, byte for byte."""
+    root = str(tmp_path / "src")
+    spark.range(6).selectExpr("id AS doc_id").write.parquet(
+        os.path.join(root, "data")
+    )
+    gio.publish_snapshot(root, ["data"])
+    cur = gio.manifest_current(root)
+    with open(os.path.join(root, gio.MANIFEST_DIRNAME, f"{cur}.json")) as fh:
+        manifest = fh.read()
+
+    clone = gio.clone_store(root, "test_clone_")
+    try:
+        gio.write_tombstones(
+            clone, spark.createDataFrame([(3,)], "id int"), "id", "doc_id long"
+        )
+        tomb = gio.read_tombstones(spark, clone, "doc_id long")
+        live = gio.mask_tombstones(gio.read_relation(spark, clone, "data"), tomb)
+        assert sorted(r.doc_id for r in live.collect()) == [0, 1, 2, 4, 5]
+        assert gio.read_tombstones(spark, root, "doc_id long") is None
+        assert gio.manifest_current(root) == cur
+        with open(os.path.join(root, gio.MANIFEST_DIRNAME, f"{cur}.json")) as fh:
+            assert fh.read() == manifest
+        assert gio.read_relation(spark, root, "data").count() == 6
+    finally:
+        shutil.rmtree(os.path.dirname(clone), ignore_errors=True)
+
+
 @pytest.mark.mutant_keycol  # per-family store battery: rides the fourth suite command
 def test_minhash_append_crash_invisible_then_retry_exact(spark, sf_dir, tmp_path):
     """Index-level crash injection (VERDICT r9 item 4's done criterion):

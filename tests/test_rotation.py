@@ -234,3 +234,16 @@ def test_expiry_arithmetic_converges_at_steady_state(tmp_path):
             # consistent with the assertion above BY CONSTRUCTION: the
             # steady-state max age must sit strictly below EXPIRED_AGE.
             assert rnd - min(h.values()) < R.EXPIRED_AGE
+
+
+def test_all_queries_leads_with_rotation_window(monkeypatch):
+    """``all_queries`` orders the computed rotation window first whatever
+    round the history has reached — there is no hand-curated fallback
+    list behind it, not even before any correctness record exists."""
+    all_queries()
+    names = list(R._REGISTRY)
+    window = names[-3:][::-1] + names[:2]
+    monkeypatch.setattr(R, "compute_rotation", lambda *a, **k: (window, 0))
+    got = list(all_queries())
+    assert got[: len(window)] == window
+    assert sorted(got) == sorted(names)
